@@ -82,7 +82,17 @@ class HadoopFS:
         filesystems disagree on HOW they fail (some throw, HDFS-style
         ones return false), and a silent false would leave the stale
         partition the caller believes gone."""
-        p = self._jpath(path)
+        self._delete(self._jpath(path), path)
+
+    def delete_uri(self, uri: str) -> None:
+        """``delete`` for a URL-encoded URI, the form ``_metadata.file_path``
+        and ``DataFrame.inputFiles()`` return (``a%20b`` for a directory
+        named ``a b``). ``Path(String)`` would take the escapes literally,
+        name a file that does not exist and make the delete a silent
+        no-op; ``Path(java.net.URI)`` decodes them."""
+        self._delete(self._jvm.org.apache.hadoop.fs.Path(self._jvm.java.net.URI(uri)), uri)
+
+    def _delete(self, p, path: str) -> None:
         if not self._fs.delete(p, True) and self._fs.exists(p):
             raise IOError(f"delete failed: {path}")
 

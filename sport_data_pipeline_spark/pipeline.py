@@ -21,9 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpointing import stage_checkpoint
 from .engine import SportsAnalyticsEngine
-from .operators.merge import merge_latest
+from .operators.merge import merge_into_parquet
 from .reports import render_report
 from .schemas import MERGE_KEYS, SILVER_TABLES
 from .sources.sinks import read_parquet_if_exists
@@ -50,17 +49,10 @@ class SilverStore:
         return read_parquet_if_exists(self.spark, self.path(name))
 
     def merge_write(self, name: str, batch: DataFrame, order_col: str = "ingested_at") -> DataFrame:
+        """Upsert ``batch`` into table ``name``; returns the merged table."""
         keys = list(MERGE_KEYS.get(name, (batch.columns[0],)))
-        existing = self.read(name)
-        merged = (
-            merge_latest(existing.unionByName(batch, allowMissingColumns=True), keys, [order_col])
-            if existing is not None
-            else merge_latest(batch, keys, [order_col])
-        )
-        # cut lineage so we can overwrite the path we just read
-        out = stage_checkpoint(merged)
-        out.write.mode("overwrite").parquet(self.path(name))
-        return out
+        merge_into_parquet(batch, self.path(name), keys, [order_col])
+        return self.read(name)
 
 
 def ingest_bronze_batch(

@@ -227,7 +227,10 @@ def compact_parquet(
     file count. Directory ops route through the Hadoop FileSystem
     adapter, so the table may live on HDFS/object storage (on a store
     emulating rename the swap window widens to the copy time — prefer a
-    transactional table format there).
+    transactional table format there). The ``repartition`` rewrite drops
+    the key-range clustering ``operators.merge.merge_into_parquet`` keeps,
+    so the next upsert batch into a compacted table touches every file
+    once, and re-clusters the rows it rewrites.
     """
     from ..fsio import HadoopFS
 

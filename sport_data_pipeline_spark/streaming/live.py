@@ -6,10 +6,12 @@ every 30 s (live scores, scraping_orchestrator.py:311-320) / 300 s (odds,
 semantics are: file-drop (or Kafka) source → watermark + business-key
 dedup → foreachBatch merge into a parquet target with latest-wins keys.
 
-The upsert in foreachBatch re-reads the target and rewrites it merged —
-the transactional-format-free equivalent of MERGE (at production scale the
-target would be Delta/Iceberg `MERGE INTO`; that jar is not in this image,
-so the rewrite path is the library's `upsert`).
+The upsert in foreachBatch is ``operators.merge.merge_into_parquet``: it
+rewrites only the target files that hold a key of the micro-batch, so a
+poll costs the rows it touches, not the size of the table, as the
+reference's per-row ON CONFLICT did. It is the transactional-format-free
+equivalent of MERGE (at production scale the target would be
+Delta/Iceberg `MERGE INTO`; that jar is not in this image).
 """
 
 from __future__ import annotations
@@ -20,9 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from ..checkpointing import stage_checkpoint
-from ..operators.merge import merge_latest
-from ..sources.sinks import read_parquet_if_exists
+from ..operators.merge import merge_into_parquet
 
 
 def read_tick_stream(
@@ -62,22 +62,14 @@ def start_upsert_sink(
 ) -> StreamingQuery:
     """foreachBatch latest-wins upsert into a parquet target (T1/T2/T5).
 
-    Idempotent: replaying a batch merges to the same state because
-    merge_latest keeps one row per key by (order_by) — the reference's
-    ON CONFLICT DO UPDATE with scraped_at ordering.
+    Each micro-batch rewrites only the target files holding its keys
+    (``merge_into_parquet``). Idempotent: replaying a batch merges to the
+    same state because merge_latest keeps one row per key by (order_by) —
+    the reference's ON CONFLICT DO UPDATE with scraped_at ordering.
     """
-    spark = stream.sparkSession
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        existing = read_parquet_if_exists(spark, target_path)
-        if existing is not None:
-            merged = merge_latest(
-                existing.unionByName(batch, allowMissingColumns=True), keys, list(order_by)
-            )
-        else:  # first batch: target does not exist yet
-            merged = merge_latest(batch, keys, list(order_by))
-        # stage_checkpoint cuts the lineage so we can overwrite the path we read.
-        stage_checkpoint(merged).write.mode("overwrite").parquet(target_path)
+        merge_into_parquet(batch, target_path, keys, list(order_by))
 
     writer = stream.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint

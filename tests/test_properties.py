@@ -1,7 +1,9 @@
 """Property-based tests (hypothesis) for the pure-Python seams: container
 header codecs round-trip arbitrary valid parameters, and resize geometry
 keeps its invariants on any input. These run driver-side (no Spark), so
-hypothesis can afford hundreds of examples."""
+hypothesis can afford hundreds of examples. The file-level upsert
+(``merge_into_parquet``) properties at the end run on Spark and keep
+their example counts small."""
 
 from __future__ import annotations
 
@@ -9,7 +11,7 @@ import io
 import struct
 import wave
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from sport_data_pipeline_spark.operators.multimodal import (
     fit_within,
@@ -404,3 +406,87 @@ def test_gif_animation_composites_like_reference_property(w, h, seed):
             region[:, :] = palarr[0]
         elif disp == 3:
             region[:, :] = saved
+
+
+# ---------------------------------------------------------------------------
+# merge_into_parquet: random upsert batch sequences against merge_latest.
+
+UPSERT_DDL = "k long, v long, scraped_at long"
+
+
+@st.composite
+def upsert_batches(draw):
+    """2-6 batches of (key, scraped_at) ticks: keys repeat across batches
+    (new and existing keys), scraped_at arrives out of order, and no
+    (key, scraped_at) pair repeats, so latest-wins has no ties. Also
+    returns the index of the batch that carries an extra column."""
+    ticks = draw(st.lists(st.tuples(st.integers(0, 40), st.integers(0, 10_000)),
+                          min_size=1, max_size=80, unique=True))
+    n = draw(st.integers(2, 6))
+    owner = draw(st.lists(st.integers(0, n - 1), min_size=len(ticks), max_size=len(ticks)))
+    batches = [b for b in ([t for t, o in zip(ticks, owner) if o == i] for i in range(n)) if b]
+    return batches, draw(st.integers(0, len(batches) - 1))
+
+
+@given(case=upsert_batches())
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_merge_into_parquet_equals_merge_latest_property(spark, case):
+    import functools
+    import tempfile
+    from unittest import mock
+
+    from pyspark.sql import functions as F
+
+    from sport_data_pipeline_spark.operators import merge
+
+    batches, extra = case
+    frames = []
+    with tempfile.TemporaryDirectory() as d, mock.patch.object(merge, "ROWS_PER_FILE", 4):
+        target = f"{d}/t"
+        for i, rows in enumerate(batches):
+            df = spark.createDataFrame([(k, k * 100_000 + ts, ts) for k, ts in rows], UPSERT_DDL)
+            if i == extra:
+                df = df.withColumn("note", F.concat(F.lit("b"), F.col("v").cast("string")))
+            merge.merge_into_parquet(df, target, ["k"], ["scraped_at"])
+            frames.append(df)
+        union = functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+        want = merge.merge_latest(union, ["k"], ["scraped_at"])
+        got = spark.read.parquet(target)
+        cols = sorted(want.columns)
+        assert sorted(got.columns) == cols
+        assert sorted(got.select(cols).collect()) == sorted(want.select(cols).collect())
+
+
+def test_single_key_updates_rewrite_one_file_and_do_not_fragment(spark, tmp_path, monkeypatch):
+    """50 batches, each updating one uniformly random existing key: every
+    batch replaces exactly the one file holding its key, every other file
+    keeps its name, and the file count stays within a fixed bound."""
+    import os
+
+    import numpy as np
+
+    from sport_data_pipeline_spark.operators import merge
+
+    monkeypatch.setattr(merge, "ROWS_PER_FILE", 16)
+    target, n = str(tmp_path / "t"), 120
+    bound = 2 * -(-n // 8)  # twice the files of a fresh write at 8 rows a file
+
+    def files():
+        return {f for f in os.listdir(target) if f.endswith(".parquet")}
+
+    merge.merge_into_parquet(
+        spark.createDataFrame([(k, 0, 0) for k in range(n)], UPSERT_DDL),
+        target, ["k"], ["scraped_at"])
+    rng = np.random.default_rng(20)
+    for i in range(1, 51):
+        before = files()
+        key = int(rng.integers(0, n))
+        replaced = merge.merge_into_parquet(
+            spark.createDataFrame([(key, i, i)], UPSERT_DDL), target, ["k"], ["scraped_at"])
+        after = files()
+        assert replaced == 1 and len(before - after) == 1, (i, key)
+        assert len(after) <= bound
+    got = spark.read.parquet(target)
+    assert got.count() == n and got.select("k").distinct().count() == n
+

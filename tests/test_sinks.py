@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sport_data_pipeline_spark.sources.sinks import (
+    read_parquet_if_exists,
     write_bucketed_table,
     write_partitioned,
 )
@@ -177,3 +178,27 @@ def test_retention_and_compaction_work_on_file_uris(spark, tmp_path):
     spark.range(100).repartition(8).write.parquet("file://" + q)
     assert compact_parquet(spark, "file://" + q, target_mb=64) == 1
     assert spark.read.parquet("file://" + q).count() == 100
+
+
+# read_parquet_if_exists is the data-loss guard of every read-merge-write
+# sink: only a missing path may read as "first write".
+
+
+def test_read_parquet_if_exists_missing_path_is_none(spark, tmp_path):
+    assert read_parquet_if_exists(spark, str(tmp_path / "never_written")) is None
+
+
+def test_read_parquet_if_exists_raises_on_a_non_parquet_file(spark, tmp_path):
+    target = tmp_path / "t"
+    target.mkdir()
+    (target / "part-00000.parquet").write_text("<html>503 upstream timeout</html>")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        read_parquet_if_exists(spark, str(target))
+
+
+def test_read_parquet_if_exists_raises_on_an_empty_directory(spark, tmp_path):
+    target = tmp_path / "t"
+    target.mkdir()
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        read_parquet_if_exists(spark, str(target))
+
