@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.text import DEFAULT_LANG_MARKERS, lang_id, quality_features, token_count
-from .dedup import exact_dedup, minhash_near_dup
+from .dedup import exact_dedup, minhash_jaccard_pairs
 
 
 def weighted_sample(
@@ -133,7 +133,7 @@ def clean_corpus(
 
     deduped = exact_dedup(passed, text_col, id_col)
 
-    pairs = minhash_near_dup(
+    pairs = minhash_jaccard_pairs(
         deduped,
         id_col,
         text_col,
@@ -141,6 +141,7 @@ def clean_corpus(
         shingle_n=shingle_n,
         num_hashes=num_hashes,
         bands=bands,
+        max_bucket_size=100,
     )
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     survivors = deduped.join(losers, id_col, "left_anti")

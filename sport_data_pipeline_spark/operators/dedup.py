@@ -7,8 +7,9 @@ candidate buckets:
 - exact:      one hash-agg on a content fingerprint (md5 of normalized text).
 - jaccard:    blocked self-join (caller supplies blocking keys) + set ops.
 - minhash:    shingle → K hash permutations → band buckets → pairs only
-              within a bucket (classic LSH banding; K=32, 8 bands × 4 rows
-              by default), then exact-Jaccard verification of candidates.
+              within a capped bucket (classic LSH banding; 32 hashes × 16
+              bands by default, optional block keys), then the same
+              exact-Jaccard verification as jaccard.
 - simhash:    64-bit signature; candidates = equal 16-bit chunk (tables
               rotated 4×), verify by Hamming distance.
 
@@ -19,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import content_fingerprint, tokens
@@ -34,6 +35,34 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     fp = df.select(F.col(id_col), content_fingerprint(text_col).alias("__fp"))
     keep = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col)).drop("__fp")
     return df.join(keep, id_col, "left_semi")
+
+
+def _jaccard_verify(threshold: float) -> tuple[Column, Column]:
+    """The exact verify shared by every Jaccard operator here, over the
+    columns ``__set_a``/``__n_a``/``__set_b``/``__n_b`` (distinct shingle
+    hashes and their sizes): returns (size_window, jaccard).
+
+    ``size_window`` is the set-similarity length filter: J(A,B) >= t forces
+    the sizes into a t-window (|A∩B| <= min, |A∪B| >= max ⇒ min/max >= J).
+    Evaluated on two ints before the O(|set|) intersection, it prunes
+    candidates before any set op runs — the verify stage otherwise
+    dominates the whole job (measured 7.5× on a corpus whose blocks pair
+    freely), and at 100× corpus the saving multiplies directly.
+    DIVISION form, not t·max <= min: fl(t·max) can round just above an
+    integer min and drop a pair whose Jaccard equals t exactly, whereas
+    min/max >= inter/union in the reals plus fl-monotonicity guarantees
+    fl(min/max) >= fl(inter/union) — exactly consistent with the final
+    jaccard >= t filter, hence lossless.
+    """
+    size_window = (
+        F.least("__n_a", "__n_b").cast("double") / F.greatest("__n_a", "__n_b")
+        >= F.lit(threshold)
+    )
+    inter = F.size(F.array_intersect("__set_a", "__set_b"))
+    # |A∪B| = |A| + |B| − |A∩B| over distinct arrays: one array op per
+    # surviving pair instead of two.
+    union = F.col("__n_a") + F.col("__n_b") - inter
+    return size_window, F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
 
 
 def jaccard_pairs(
@@ -56,18 +85,9 @@ def jaccard_pairs(
     # shingle expression would re-evaluate per reference. The cache is also
     # the scale-correct plan: tokenize each doc once, not once per use.
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    block_exprs = [F.col(c) for c in block_cols]
-    # Hashed shingles (array<long>), not shingle strings: set-intersection
-    # SIZES — and therefore Jaccard — are identical modulo 2^-64 hash
-    # collisions, and primitive-array set ops avoid per-element string
-    # hashing in the pair loop, which dominates the verify stage.
-    shingle_set = (
-        _shingle_hashes(text_col, shingle_n)
-        if shingle_n > 1
-        else F.array_distinct(F.transform(tokens(text_col), lambda t: F.xxhash64(t)))
-    )
+    shingle_set = _shingle_sets(text_col, shingle_n)
     shingled = (
-        df.repartition(n_parts, *block_exprs, F.col(id_col))
+        df.repartition(n_parts, *[F.col(c) for c in block_cols], F.col(id_col))
         .select(
             *block_cols,
             F.col(id_col),
@@ -76,46 +96,44 @@ def jaccard_pairs(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    a = shingled.select(
-        *[F.col(c).alias(f"__ba_{c}") for c in block_cols],
-        F.col(id_col).alias("id_a"),
-        F.col("__set").alias("__set_a"),
-        F.col("__n").alias("__n_a"),
-    )
-    b = shingled.select(
-        *[F.col(c).alias(f"__bb_{c}") for c in block_cols],
-        F.col(id_col).alias("id_b"),
-        F.col("__set").alias("__set_b"),
-        F.col("__n").alias("__n_b"),
+    a, b = (
+        shingled.select(
+            *[F.col(c).alias(f"__b{t}_{c}") for c in block_cols],
+            F.col(id_col).alias(f"id_{t}"),
+            F.col("__set").alias(f"__set_{t}"),
+            F.col("__n").alias(f"__n_{t}"),
+        )
+        for t in "ab"
     )
     cond = F.col("id_a") < F.col("id_b")
     for c in block_cols:
         cond = cond & (F.col(f"__ba_{c}") == F.col(f"__bb_{c}"))
-    # Set-similarity length filter: J(A,B) >= t forces the sizes into a
-    # t-window (|A∩B| <= min, |A∪B| >= max ⇒ min/max >= J). Evaluated in
-    # the join condition on two cached ints, it prunes candidates BEFORE
-    # the O(|set|) intersection runs — the verify stage otherwise dominates
-    # the whole job (measured 7.5× on a corpus whose blocks pair freely),
-    # and at 100× corpus the saving multiplies directly.
-    # DIVISION form, not t·max <= min: fl(t·max) can round just above an
-    # integer min and drop a pair whose Jaccard equals t exactly, whereas
-    # min/max >= inter/union in the reals plus fl-monotonicity guarantees
-    # fl(min/max) >= fl(inter/union) — exactly consistent with the final
-    # jaccard >= t filter, hence lossless.
-    cond = cond & (
-        F.least("__n_a", "__n_b").cast("double") / F.greatest("__n_a", "__n_b")
-        >= F.lit(threshold)
-    )
-    inter = F.size(F.array_intersect("__set_a", "__set_b"))
-    # |A∪B| = |A| + |B| − |A∩B| over distinct arrays: one array op per
-    # surviving pair instead of two.
-    union = F.col("__n_a") + F.col("__n_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+    size_window, jac = _jaccard_verify(threshold)
     return (
-        a.join(b, cond)
+        a.join(b, cond & size_window)
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def _shifted_fold(arr: Column, n: int, combine, null_type: str) -> Column:
+    """``combine`` folded over ``n`` shifted copies of ``arr``: element i is
+    combine(arr[i], …, arr[i+n-1]), NULL (of ``null_type``) where a window
+    runs off the end. zip_with null-pads the shorter side, so the fold is
+    O(n · len) with no per-position slicing and no per-element
+    ``element_at`` on an expression (which re-evaluates the whole child
+    array per access in interpreted mode)."""
+    out = arr
+    for k in range(1, n):
+        shifted = F.slice(arr, k + 1, F.greatest(F.size(arr) - k, F.lit(0)))
+        out = F.zip_with(
+            out,
+            shifted,
+            lambda a, b: F.when(a.isNull() | b.isNull(), F.lit(None).cast(null_type)).otherwise(
+                combine(a, b)
+            ),
+        )
+    return out
 
 
 def _positional_shingle_hashes(text_col: str, n: int) -> Column:
@@ -123,33 +141,28 @@ def _positional_shingle_hashes(text_col: str, n: int) -> Column:
     partials dropped) as array<long>, in O(n · tokens).
 
     Hashes each token once, then folds ``n`` shifted copies of the hash
-    array together with zip_with — shingle hash = chained xxhash64 of the
-    n consecutive token hashes. Avoids both O(len²) shingle *strings*
-    (slice+concat per position) and per-element ``element_at`` on an
-    expression (which re-evaluates the whole child array per access in
-    interpreted mode).
+    array together — shingle hash = chained xxhash64 of the n consecutive
+    token hashes. Avoids O(len²) shingle *strings* (slice+concat per
+    position).
     """
-    toks = tokens(F.col(text_col))
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    sh = th
-    for k in range(1, n):
-        # k-shifted copy; zip_with null-pads the shorter side, and nulls
-        # (partial trailing shingles) drop via array_compact
-        shifted = F.slice(th, k + 1, F.greatest(F.size(th) - k, F.lit(0)))
-        sh = F.zip_with(
-            sh,
-            shifted,
-            lambda a, b: F.when(a.isNull() | b.isNull(), F.lit(None).cast("long")).otherwise(
-                F.xxhash64(a, b)
-            ),
-        )
-    return F.array_compact(sh)
+    th = F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
+    return F.array_compact(_shifted_fold(th, n, F.xxhash64, "long"))
 
 
-def _shingle_hashes(text_col: str, n: int) -> Column:
-    """Distinct n-gram shingle hashes as array<long> (set semantics for
-    Jaccard / MinHash)."""
-    return F.array_distinct(_positional_shingle_hashes(text_col, n))
+def _shingle_sets(text_col: str, shingle_n: int) -> Column:
+    """The one shingle-hash-set expression of every Jaccard and MinHash
+    operator here and of ``build_dedup_index`` — an indexed corpus routes
+    bit-identically to a raw one only because both use it (unit-pinned).
+
+    Hashed shingles (array<long>), not shingle strings: set-intersection
+    SIZES — and therefore Jaccard — are identical modulo 2^-64 hash
+    collisions, and primitive-array set ops avoid per-element string
+    hashing in the pair loop, which dominates the verify stage."""
+    return F.array_distinct(
+        _positional_shingle_hashes(text_col, shingle_n)
+        if shingle_n > 1
+        else F.transform(tokens(text_col), lambda t: F.xxhash64(t))
+    )
 
 
 def winnow_fingerprints(
@@ -167,23 +180,12 @@ def winnow_fingerprints(
     Guarantee: any shared token run of length ≥ window + k - 1 between two
     documents yields at least one shared fingerprint — substring-overlap
     detection at ~1/window the storage of the full shingle set. Same
-    shifted-zip_with construction as the shingle hashes: O(window · grams)
-    per row, no per-position slicing.
+    shifted fold as the shingle hashes: O(window · grams) per row.
 
     Returns (id_col, fingerprints array<long>); docs with fewer than
     window + k - 1 tokens get an empty array.
     """
-    grams = _positional_shingle_hashes(text_col, k)
-    m = grams
-    for j in range(1, window):
-        shifted = F.slice(grams, j + 1, F.greatest(F.size(grams) - j, F.lit(0)))
-        m = F.zip_with(
-            m,
-            shifted,
-            lambda a, b: F.when(a.isNull() | b.isNull(), F.lit(None).cast("long")).otherwise(
-                F.least(a, b)
-            ),
-        )
+    m = _shifted_fold(_positional_shingle_hashes(text_col, k), window, F.least, "long")
     return df.select(
         F.col(id_col), F.array_distinct(F.array_compact(m)).alias(out_col)
     )
@@ -211,17 +213,7 @@ def winnow_fingerprints_portable(
     grams = F.transform(
         idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k)).cast("binary"))
     )
-    m = grams
-    for j in range(1, window):
-        shifted = F.slice(grams, j + 1, F.greatest(F.size(grams) - j, F.lit(0)))
-        m = F.zip_with(
-            m,
-            shifted,
-            lambda a, b: F.when(a.isNull() | b.isNull(), F.lit(None).cast("string")).otherwise(
-                F.least(a, b)
-            ),
-        )
-    fps = F.array_distinct(F.array_compact(m))
+    fps = F.array_distinct(F.array_compact(_shifted_fold(grams, window, F.least, "string")))
     return df.select(F.col(id_col), F.explode(fps).alias(out_col))
 
 
@@ -236,266 +228,185 @@ def _minhash_signature(shingle_set: Column, num_hashes: int) -> list[Column]:
     ]
 
 
-def minhash_near_dup(
+def _lsh_buckets(
     df: DataFrame,
+    key_cols: Sequence[str],
     id_col: str,
-    text_col: str,
-    threshold: float = 0.7,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    max_bucket_size: int = 100,
-) -> DataFrame:
-    """MinHash + LSH banding near-dup pairs, verified by exact Jaccard.
+    set_col: str,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int,
+    persist: bool = False,
+    names: tuple[str, str, str] = ("__band", "band", "sig"),
+) -> tuple[DataFrame, DataFrame]:
+    """Banded MinHash-LSH buckets over ``df``'s shingle sets.
 
-    shingle → K minhashes → ``bands`` band-signatures → explode → bucket
-    join (pairs share ≥1 band) → dedupe candidates → exact Jaccard filter.
-    Only candidates ever pairwise-compare, so scale is driven by bucket
-    sizes, not n².
+    Returns (signed, buckets): ``signed`` is ``df`` plus K = ``num_hashes``
+    minhash columns (persisted when ``persist``, so a caller that also
+    verifies from it computes every shingle set and signature once);
+    ``buckets`` has one (key_cols…, id, band, sig) row per band — each band
+    signature an xxhash64 of num_hashes/bands consecutive minhashes — with
+    buckets (equal key_cols, band, sig) larger than ``max_bucket_size``
+    dropped. ``names`` are the exploded struct and its band / sig columns.
 
-    Tune banding to the threshold: candidate recall follows
-    1-(1-s^r)^b with r = num_hashes/bands; the defaults (4 bands × 4 rows)
-    put the S-curve knee at (1/4)^(1/4)≈0.71, matched to the default 0.7
-    threshold. A much lower threshold needs looser banding *and* accepts a
-    candidate explosion — don't.
-
-    Jaccard here is over hashed shingles (collisions ~2^-64 — standard
-    MinHash practice); exact string-shingle Jaccard lives in
-    ``jaccard_pairs``.
-
-    ``max_bucket_size`` drops buckets bigger than this before the pair
-    join. A bucket that large is non-discriminative (boilerplate shingles,
-    skewed signatures) and would go quadratic; at corpus scale this cap is
-    what keeps the worst key from dominating the job.
-
-    Returns (id_a, id_b, jaccard).
+    A bucket larger than the cap is non-discriminative (boilerplate
+    shingles, skewed signatures) and would make the pair join quadratic in
+    its size; at corpus scale the cap is what keeps the worst key from
+    dominating the job. It is a window count over the bucket key: ONE
+    exchange that also leaves the rows hash-partitioned on exactly the
+    pair-join key, so that join runs without re-shuffling either side (vs.
+    the obvious groupBy-count + semi-join gate: three exchanges on the same
+    key).
     """
+    struct_col, band, sig = names
     rows = num_hashes // bands
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    # Repartition raw rows (parallel shingling on single-file input), then
-    # PERSIST the signature table: it feeds banding AND both verification
-    # sides, and Catalyst inlines projections through exchanges — without
-    # the cache the O(len²) shingle construction and the K minhash
-    # expressions re-evaluate once per reference (measured 12× plan
-    # duplication). Computing signatures once is also what a production
-    # dedup over a real corpus does.
-    base = (
-        df.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col), _shingle_hashes(text_col, shingle_n).alias("__set"))
-        .filter(F.size("__set") > 0)
-    )
-    # ONE persisted table carrying sets + signatures: banding and both
-    # verification sides read it, and its first materialization computes the
-    # shingle sets exactly once (base is referenced only here, so caching it
-    # separately would just store a second copy of every shingle set).
-    sig = base.select(
-        F.col(id_col), "__set", *_minhash_signature(F.col("__set"), num_hashes)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    shingled = sig  # sets for verification come from the same cached table
-    banded = sig.select(
+    signed = df.select("*", *_minhash_signature(F.col(set_col), num_hashes))
+    if persist:
+        signed = signed.persist(StorageLevel.MEMORY_AND_DISK)
+    banded = signed.select(
+        *key_cols,
         F.col(id_col),
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(*[F.col(f"__mh_{bi * rows + r}") for r in range(rows)]).alias("sig"),
+                        F.lit(bi).alias(band),
+                        F.xxhash64(
+                            *[F.col(f"__mh_{bi * rows + r}") for r in range(rows)]
+                        ).alias(sig),
                     )
                     for bi in range(bands)
                 ]
             )
-        ).alias("__band"),
-    ).select(id_col, "__band.band", "__band.sig")
-
-    # Drop non-discriminative mega-buckets before pairing (see docstring).
-    # A window count over (band, sig) needs ONE exchange and leaves the
-    # rows hash-partitioned on exactly the self-join key, so the bucket
-    # join below runs without re-shuffling either side (vs. the obvious
-    # groupBy-count + semi-join gate: three exchanges on the same key).
-    from pyspark.sql import Window
-
-    bucket_w = Window.partitionBy("band", "sig")
-    banded = (
-        banded.withColumn("__bn", F.count(F.lit(1)).over(bucket_w))
+        ).alias(struct_col),
+    ).select(*key_cols, id_col, f"{struct_col}.{band}", f"{struct_col}.{sig}")
+    buckets = (
+        banded.withColumn("__bn", F.count(F.lit(1)).over(Window.partitionBy(*key_cols, band, sig)))
         .filter(F.col("__bn") <= max_bucket_size)
         .drop("__bn")
     )
-
-    # Bucket-join on (band, sig) carries only ids — the wide shingle arrays
-    # rejoin after the candidate pairs are deduped, so the shuffle moves
-    # (long, long) pairs, not token sets.
-    a = banded.select(F.col("band"), F.col("sig"), F.col(id_col).alias("id_a"))
-    b = banded.select(F.col("band"), F.col("sig"), F.col(id_col).alias("id_b"))
-    candidates = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sets = shingled.select(F.col(id_col), F.col("__set"), F.size("__set").alias("__n"))
-    verified = (
-        candidates.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("__set").alias("__set_a"),
-                F.col("__n").alias("__n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("__set").alias("__set_b"),
-                F.col("__n").alias("__n_b"),
-            ),
-            "id_b",
-        )
-        # Length filter (J >= t ⇒ min/max >= t): prunes candidate pairs on
-        # two cached ints before the O(|set|) intersection. Division form
-        # for float-exact consistency with the final jaccard filter (see
-        # jaccard_pairs).
-        .filter(
-            F.least("__n_a", "__n_b").cast("double") / F.greatest("__n_a", "__n_b")
-            >= F.lit(threshold)
-        )
-    )
-    inter = F.size(F.array_intersect("__set_a", "__set_b"))
-    union = F.col("__n_a") + F.col("__n_b") - inter  # distinct arrays: |A∪B| = |A|+|B|−|A∩B|
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    return verified.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
+    return signed, buckets
 
 
 def minhash_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    block_cols: Sequence[str],
+    block_cols: Sequence[str] = (),
     threshold: float = 0.5,
     shingle_n: int = 3,
     num_hashes: int = 32,
     bands: int = 16,
     max_bucket_size: int = 200,
 ) -> DataFrame:
-    """Scale-safe composite near-dup: MinHash-LSH candidates feeding the
-    exact-Jaccard verifier.
+    """Near-dup pairs: MinHash-LSH candidates feeding the exact-Jaccard
+    verifier.
 
-    Same contract as ``jaccard_pairs`` — (id_a, id_b, jaccard) with
-    id_a < id_b, both docs in the same block, jaccard >= ``threshold`` —
-    but the candidate set comes from banded LSH buckets instead of the
-    blocked all-pairs self-join. ``jaccard_pairs`` stays linear only while
-    blocks stay small (its within-block candidates are quadratic: measured
-    14.5× work at 10× data, SCALE.md §8); here candidate volume is driven
-    by LSH bucket sizes, which the ``max_bucket_size`` cap bounds, so the
-    composite is the shape that survives 100×. The verify stage is the
-    exact same size-window-pruned set-Jaccard as ``jaccard_pairs``, so the
-    output contract (and its exact-SQL oracle) is unchanged.
+    shingle → K minhashes → ``bands`` band signatures → explode → capped
+    bucket join (pairs share ≥1 band) → dedupe candidates → size-window
+    prune → exact Jaccard filter. Same contract as ``jaccard_pairs`` —
+    (id_a, id_b, jaccard) with id_a < id_b, both docs in the same block,
+    jaccard >= ``threshold`` — but the candidate set comes from banded LSH
+    buckets instead of the blocked all-pairs self-join. ``jaccard_pairs``
+    stays linear only while blocks stay small (its within-block candidates
+    are quadratic: measured 14.5× work at 10× data, SCALE.md §8); here
+    candidate volume is driven by LSH bucket sizes, which the
+    ``max_bucket_size`` cap bounds, so this is the shape that survives
+    100×. The verify is the same as ``jaccard_pairs``'s, so the output
+    contract (and its exact-SQL oracle) is unchanged. Block keys ride
+    inside the bucket key, so candidates never cross blocks; with no
+    ``block_cols`` every doc may pair with every other.
 
-    Banding r = num_hashes/bands puts the candidate S-curve knee at
-    (1/bands)^(1/r); the default 32 hashes × 16 bands (r=2) lands the knee
-    at 0.25 — loose enough that a true pair at the 0.5 threshold banded
-    into a candidate bucket with probability 1−(1−0.5²)^16 ≈ 0.99 per the
-    standard LSH analysis, and deterministic given xxhash64 (measured
-    recall 1.0 vs the exact all-pairs oracle at sf0.001/0.01/0.1). Block
-    keys ride inside the bucket key, so candidates never cross blocks.
+    Banding r = num_hashes/bands puts the candidate S-curve
+    1-(1-s^r)^bands knee at (1/bands)^(1/r); the default 32 hashes × 16
+    bands (r=2) lands it at 0.25 — loose enough that a true pair at the 0.5
+    threshold bands into a candidate bucket with probability
+    1−(1−0.5²)^16 ≈ 0.99, and deterministic given xxhash64 (measured recall
+    1.0 vs the exact all-pairs oracle at sf0.001/0.01/0.1). Match the knee
+    to the threshold: 16 hashes × 4 bands puts it at ≈0.71 for a 0.7
+    threshold. A much lower threshold needs looser banding *and* accepts a
+    candidate explosion — don't.
 
     The intermediate signature table is persisted (banding + both verify
     sides read it); its lifetime is caller-owned — materialize the result,
     then ``spark.catalog.clearCache()`` if the session runs more jobs.
     """
-    rows = num_hashes // bands
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    block_exprs = [F.col(c) for c in block_cols]
-    shingle_set = (
-        _shingle_hashes(text_col, shingle_n)
-        if shingle_n > 1
-        else F.array_distinct(F.transform(tokens(text_col), lambda t: F.xxhash64(t)))
-    )
+    # Repartition raw rows (parallel shingling on single-file input), then
+    # PERSIST the signature table: it feeds banding AND both verification
+    # sides, and Catalyst inlines projections through exchanges — without
+    # the cache the shingle construction and the K minhash expressions
+    # re-evaluate once per reference (measured 12× plan duplication).
     base = (
-        df.repartition(n_parts, *block_exprs, F.col(id_col))
-        .select(*block_cols, F.col(id_col), shingle_set.alias("__set"))
+        df.repartition(n_parts, *[F.col(c) for c in block_cols], F.col(id_col))
+        .select(*block_cols, F.col(id_col), _shingle_sets(text_col, shingle_n).alias("__set"))
         .filter(F.size("__set") > 0)
+        .withColumn("__n", F.size("__set"))
     )
-    sig = base.select(
-        *block_cols,
-        F.col(id_col),
-        "__set",
-        F.size("__set").alias("__n"),
-        *_minhash_signature(F.col("__set"), num_hashes),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    banded = sig.select(
-        *block_cols,
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"__mh_{bi * rows + r}") for r in range(rows)]
-                        ).alias("sig"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("__band"),
-    ).select(*block_cols, id_col, "__band.band", "__band.sig")
-
-    # Mega-bucket cap via a window count — one exchange that also leaves
-    # rows partitioned on the self-join key (same rationale as
-    # minhash_near_dup). A bucket larger than the cap is non-discriminative
-    # boilerplate and would go quadratic.
-    from pyspark.sql import Window
-
-    bucket_w = Window.partitionBy(*block_cols, "band", "sig")
-    banded = (
-        banded.withColumn("__bn", F.count(F.lit(1)).over(bucket_w))
-        .filter(F.col("__bn") <= max_bucket_size)
-        .drop("__bn")
+    sig, buckets = _lsh_buckets(
+        base, block_cols, id_col, "__set", num_hashes, bands, max_bucket_size, persist=True
     )
-
+    # Bucket-join carries only ids — the wide shingle arrays rejoin after
+    # the candidate pairs are deduped, so the shuffle moves (long, long)
+    # pairs, not token sets.
     bucket_key = [*block_cols, "band", "sig"]
-    a = banded.select(*bucket_key, F.col(id_col).alias("id_a"))
-    b = banded.select(*bucket_key, F.col(id_col).alias("id_b"))
+    a = buckets.select(*bucket_key, F.col(id_col).alias("id_a"))
+    b = buckets.select(*bucket_key, F.col(id_col).alias("id_b"))
     candidates = (
         a.join(b, bucket_key)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    sets = sig.select(F.col(id_col), F.col("__set"), F.col("__n"))
-    verified = (
-        candidates.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("__set").alias("__set_a"),
-                F.col("__n").alias("__n_a"),
-            ),
-            "id_a",
+    sets_a, sets_b = (
+        sig.select(
+            F.col(id_col).alias(f"id_{t}"),
+            F.col("__set").alias(f"__set_{t}"),
+            F.col("__n").alias(f"__n_{t}"),
         )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("__set").alias("__set_b"),
-                F.col("__n").alias("__n_b"),
-            ),
-            "id_b",
-        )
-        # Lossless size-window prune before any set op (division form —
-        # see the rounding note in jaccard_pairs).
-        .filter(
-            F.least("__n_a", "__n_b").cast("double") / F.greatest("__n_a", "__n_b")
-            >= F.lit(threshold)
-        )
+        for t in "ab"
     )
-    inter = F.size(F.array_intersect("__set_a", "__set_b"))
-    union = F.col("__n_a") + F.col("__n_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    return verified.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+    size_window, jac = _jaccard_verify(threshold)
+    return (
+        candidates.join(sets_a, "id_a")
+        .join(sets_b, "id_b")
+        .filter(size_window)
+        .select("id_a", "id_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _simhash(hashes: Column, bits: int) -> Column:
+    """SimHash fold of an array<long> of token hashes into a ``bits``-bit
+    long: every hash votes +1/−1 per bit (weighted by occurrence), and the
+    positive bits of the vote vector fold back into the signature."""
+    # literal 2^b masks (bit 63 is the sign bit → min-long literal); avoids
+    # shiftleft, whose Python API only takes a constant shift amount
+    powers = F.array(
+        *[F.lit((1 << b) if b < 63 else -(1 << 63)).cast("long") for b in range(bits)]
+    )
+    votes = F.aggregate(
+        hashes,
+        F.array_repeat(F.lit(0).cast("int"), bits),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bits - 1)),
+                lambda b: F.when(
+                    h.bitwiseAND(F.element_at(powers, b.cast("int") + 1)) != 0, 1
+                ).otherwise(-1),
+            ),
+            lambda a, v: a + v,
+        ),
+    )
+    # Fold sign bits via OR of the 2^b masks (no arithmetic → no ANSI
+    # overflow on the sign bit).
+    return F.aggregate(
+        F.zip_with(
+            votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc.bitwiseOR(x),
     )
 
 
@@ -506,37 +417,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str, out_col: str = "simhash")
     vector folds back into a long. Near-dup = small Hamming distance
     (see ``simhash_near_dup``).
     """
-    toks = tokens(F.col(text_col))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    # literal 2^b masks (bit 63 is the sign bit → min-long literal); avoids
-    # shiftleft, whose Python API only takes a constant shift amount
-    powers = F.array(
-        *[F.lit((1 << b) if b < 63 else -(1 << 63)).cast("long") for b in range(64)]
-    )
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("int"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda b: F.when(
-                    h.bitwiseAND(F.element_at(powers, b.cast("int") + 1)) != 0, 1
-                ).otherwise(-1),
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    # Fold sign bits via OR of the 2^b masks (no arithmetic → no ANSI
-    # overflow on the sign bit).
-    sig = F.aggregate(
-        F.zip_with(
-            votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    return df.select(F.col(id_col), sig.alias(out_col))
+    hashes = F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
+    return df.select(F.col(id_col), _simhash(hashes, 64).alias(out_col))
 
 
 def _chunk_blocked_hamming_pairs(
@@ -606,7 +488,7 @@ def simhash_near_dup(
     Returns (id_a, id_b, hamming)."""
     # Parallelize the vote fold (raw repartition) and PERSIST the signature
     # table: both join sides read it, and Catalyst would otherwise inline
-    # the 64-bit vote fold into each reference (see minhash_near_dup).
+    # the 64-bit vote fold into each reference (see minhash_jaccard_pairs).
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     sigs = simhash(df.repartition(n_parts, F.col(id_col)), id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -619,45 +501,11 @@ def simhash_portable(df: DataFrame, id_col: str, text_col: str, out_col: str = "
     of ``simhash`` (xxhash64 has no SQL twin; the top 15 hex chars of md5
     give 60 bits that any engine converts identically, and 60 bits stay
     clear of the int64 sign bit in both)."""
-    toks = tokens(F.col(text_col))
     hashes = F.transform(
-        toks,
+        tokens(F.col(text_col)),
         lambda t: F.conv(F.substring(F.md5(t.cast("binary")), 1, 15), 16, 10).cast("long"),
     )
-    powers = F.array(*[F.lit(1 << b).cast("long") for b in range(60)])
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("int"), 60),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(59)),
-                lambda b: F.when(
-                    h.bitwiseAND(F.element_at(powers, b.cast("int") + 1)) != 0, 1
-                ).otherwise(-1),
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    sig = F.aggregate(
-        F.zip_with(
-            votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    return df.select(F.col(id_col), sig.alias(out_col))
-
-
-def _shingle_sets(text_col: str, shingle_n: int) -> Column:
-    """The shared shingle-hash-set expression for incremental dedup and
-    its write-time index — MUST stay identical on both paths so an
-    indexed corpus routes bit-identically to a raw one (unit-pinned)."""
-    return (
-        _shingle_hashes(text_col, shingle_n)
-        if shingle_n > 1
-        else F.array_distinct(F.transform(tokens(text_col), lambda t: F.xxhash64(t)))
-    )
+    return df.select(F.col(id_col), _simhash(hashes, 60).alias(out_col))
 
 
 def build_dedup_index(
@@ -803,35 +651,22 @@ def incremental_dedup(
         )
     exact = bfp.join(cfp, "__fp").groupBy(id_col).agg(F.min("__cid").alias("__exact"))
 
-    def shingled(df: DataFrame, idc: Column, tag: str) -> DataFrame:
-        # id_col joins the partition keys so a skewed block (one dominant
-        # lang/source) spreads across tasks instead of collapsing into one
-        # — the join key is still the block columns, so correctness is
-        # unchanged (same rationale as jaccard_pairs).
-        out = df.repartition(n_parts, *block_exprs, F.col(id_col)).select(
-            *[F.col(c).alias(f"__{tag}_{c}") for c in block_cols],
-            idc,
-            _shingle_sets(text_col, shingle_n).alias(f"__set_{tag}"),
-        )
-        return out.withColumn(f"__n_{tag}", F.size(f"__set_{tag}"))
-
-    a = shingled(batch, F.col(id_col), "a")
+    # id_col joins the partition keys so a skewed block (one dominant
+    # lang/source) spreads across tasks instead of collapsing into one —
+    # the join key is still the block columns, so correctness is unchanged
+    # (same rationale as jaccard_pairs).
+    a = batch.repartition(n_parts, *block_exprs, F.col(id_col)).select(
+        *[F.col(c).alias(f"__a_{c}") for c in block_cols],
+        F.col(id_col),
+        _shingle_sets(text_col, shingle_n).alias("__set_a"),
+    ).withColumn("__n_a", F.size("__set_a"))
     b = cindex.repartition(n_parts, *block_exprs, F.col(id_col)).select(
         *[F.col(c).alias(f"__b_{c}") for c in block_cols],
         F.col(id_col).alias("__cid"),
         F.col("__set").alias("__set_b"),
         F.col("__n").alias("__n_b"),
     )
-
-    # Same lossless size-window predicate as jaccard_pairs (division form —
-    # see the rounding note there): prunes before any per-pair set op.
-    size_window = (
-        F.least("__n_a", "__n_b").cast("double") / F.greatest("__n_a", "__n_b")
-        >= F.lit(threshold)
-    )
-    inter = F.size(F.array_intersect("__set_a", "__set_b"))
-    union = F.col("__n_a") + F.col("__n_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+    size_window, jac = _jaccard_verify(threshold)
 
     if minhash_candidates is None:
         cond = F.lit(True)
@@ -840,78 +675,42 @@ def incremental_dedup(
         pairs = a.join(b, cond & size_window)
     else:
         # One-sided banded LSH: batch bands × corpus bands meet on
-        # (block, band, band-signature); ids-only candidates, sets rejoin
-        # for the exact verify. Both shingle frames persist — each feeds
-        # its banding AND the verify join-back. As with
+        # (block, band, band-signature), each side bucket-capped; ids-only
+        # candidates, sets rejoin for the exact verify. Both shingle frames
+        # persist — each feeds its banding AND the verify join-back. As with
         # minhash_jaccard_pairs, the persists' lifetime is session-owned:
         # materialize the result, then ``spark.catalog.clearCache()`` (or
         # re-create the session) if the caller keeps running jobs — do NOT
         # call this path inside a long-lived loop that can't clear cache
         # (streaming foreachBatch uses the plain blocked branch).
         num_hashes, bands = minhash_candidates
-        rows = num_hashes // bands
         # Empty shingle sets can never near-match (the size window is NULL
         # for them) but every one of them would carry the identical
         # all-NULL band signature — one degenerate mega-bucket joining all
         # short docs quadratically. Exclude them BEFORE banding, exactly
-        # like the sibling operators' size>0 filters.
+        # like minhash_jaccard_pairs' size>0 filter.
         a = a.filter(F.col("__n_a") > 0).persist(StorageLevel.MEMORY_AND_DISK)
         b = b.filter(F.col("__n_b") > 0).persist(StorageLevel.MEMORY_AND_DISK)
-
-        def banded(df_: DataFrame, tag: str, idc: str) -> DataFrame:
-            sigs = df_.select(
-                *[F.col(f"__{tag}_{c}") for c in block_cols],
-                F.col(idc),
-                *_minhash_signature(F.col(f"__set_{tag}"), num_hashes),
-            )
-            return sigs.select(
-                *[F.col(f"__{tag}_{c}") for c in block_cols],
-                F.col(idc),
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(bi).alias(f"__band_{tag}"),
-                                F.xxhash64(
-                                    *[F.col(f"__mh_{bi * rows + r}") for r in range(rows)]
-                                ).alias(f"__sig_{tag}"),
-                            )
-                            for bi in range(bands)
-                        ]
-                    )
-                ).alias("__bs"),
-            ).select(
-                *[f"__{tag}_{c}" for c in block_cols],
+        buckets_a, buckets_b = (
+            _lsh_buckets(
+                side,
+                [f"__{t}_{c}" for c in block_cols],
                 idc,
-                f"__bs.__band_{tag}",
-                f"__bs.__sig_{tag}",
-            )
-
-        # Mega-bucket cap, per side (window count — one exchange that also
-        # leaves rows partitioned on the join key, same rationale as
-        # minhash_near_dup): a bucket bigger than the cap is
-        # non-discriminative boilerplate and would make the batch-bucket ×
-        # corpus-bucket join quadratic in bucket size.
-        from pyspark.sql import Window
-
-        def capped(df_: DataFrame, tag: str) -> DataFrame:
-            w = Window.partitionBy(
-                *[f"__{tag}_{c}" for c in block_cols], f"__band_{tag}", f"__sig_{tag}"
-            )
-            return (
-                df_.withColumn("__bn", F.count(F.lit(1)).over(w))
-                .filter(F.col("__bn") <= max_bucket_size)
-                .drop("__bn")
-            )
-
+                f"__set_{t}",
+                num_hashes,
+                bands,
+                max_bucket_size,
+                names=("__bs", f"__band_{t}", f"__sig_{t}"),
+            )[1]
+            for side, t, idc in ((a, "a", id_col), (b, "b", "__cid"))
+        )
         bcond = (F.col("__band_a") == F.col("__band_b")) & (
             F.col("__sig_a") == F.col("__sig_b")
         )
         for c in block_cols:
             bcond = bcond & (F.col(f"__a_{c}") == F.col(f"__b_{c}"))
         cand = (
-            capped(banded(a, "a", id_col), "a")
-            .join(capped(banded(b, "b", "__cid"), "b"), bcond)
+            buckets_a.join(buckets_b, bcond)
             .select(id_col, "__cid")
             .dropDuplicates([id_col, "__cid"])
         )
@@ -979,7 +778,7 @@ def duplicated_spans(
     and md5 keeps the grouping key portable to external SQL engines.
 
     The shingle-position frame is persisted (it feeds the dup-set agg AND
-    the join-back); as with ``jaccard_pairs``/``minhash_near_dup``, its
+    the join-back); as with ``jaccard_pairs``/``minhash_jaccard_pairs``, its
     lifetime is caller-owned — materialize the result, then
     ``spark.catalog.clearCache()`` (or unpersist) if the session keeps
     running more jobs, as bench.py does between queries.

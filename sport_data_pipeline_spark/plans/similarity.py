@@ -2,10 +2,12 @@
 
 Covers SURVEY.md §2.3 J8 (fuzzy entity resolution) and the LLM-pipeline
 operators: n-gram Jaccard near-dup, MinHash-LSH, SimHash, and cosine top-k
-over the embeddings table. MinHash/SimHash signatures hash with Spark's
-xxhash64 which has no DuckDB twin, so those two queries are registered
-without an oracle (driver records a rows-only check); their *semantics* are
-unit-tested against brute-force Jaccard/Hamming in tests/.
+over the embeddings table. MinHash signatures hash with Spark's xxhash64,
+which has no DuckDB twin, so the MinHash queries are oracled by exact
+all-pairs Jaccard SQL (valid because measured LSH recall is 1.0 on these
+corpora); the SimHash query runs on the md5-based portable signature. Their
+*semantics* are also unit-tested against brute-force Jaccard/Hamming in
+tests/.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..checkpointing import stage_checkpoint
-from ..operators.dedup import jaccard_pairs, minhash_near_dup, simhash_near_dup
+from ..operators.dedup import jaccard_pairs, minhash_jaccard_pairs
 from ..operators.entity import resolve_entities
 from ..operators.similarity import (
     build_ivf_index,
@@ -199,8 +201,6 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate generation feeding the exact-Jaccard verifier."""
-    from ..operators.dedup import minhash_jaccard_pairs
-
     d = _t(spark, sf_dir, "documents")
     return minhash_jaccard_pairs(
         d,
@@ -215,8 +215,9 @@ def minhash_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MinHash-LSH and SimHash near-dup (xxhash64-based — no SQL oracle; driver
-# records rows-only; semantics unit-tested in tests/test_dedup.py).
+# MinHash-LSH near-dup without block keys (minhash_jaccard_pairs with
+# block_cols=()) and SimHash near-dup, each against an exact all-pairs SQL
+# oracle; semantics also unit-tested in tests/test_dedup.py.
 # ---------------------------------------------------------------------------
 
 
@@ -247,14 +248,15 @@ SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.7
 
 
 # Not headline: the family's bench representative is the composite
-# minhash_jaccard_neardup (same LSH candidate machinery + exact verify);
+# minhash_jaccard_neardup (the same operator, with block keys);
 # keeping both in the headline set double-counted the heaviest family and
 # maximized the official total's exposure to co-tenant noise (r5 verdict).
 @query("minhash_neardup", survey="dedup-minhash-lsh", oracle=MINHASH_ORACLE)
 def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    return minhash_near_dup(
-        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8
+    return minhash_jaccard_pairs(
+        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8,
+        max_bucket_size=100,
     )
 
 
@@ -573,8 +575,9 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_dup(
-        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8
+    pairs = minhash_jaccard_pairs(
+        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8,
+        max_bucket_size=100,
     )
     cc = connected_components(pairs, "id_a", "id_b")
     return cc.select(

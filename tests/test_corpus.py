@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from sport_data_pipeline_spark.catalog import load_table
 from sport_data_pipeline_spark.functions.text import content_fingerprint
 from sport_data_pipeline_spark.operators.corpus import clean_corpus
-from sport_data_pipeline_spark.operators.dedup import minhash_near_dup
+from sport_data_pipeline_spark.operators.dedup import minhash_jaccard_pairs
 
 from conftest import SF_DIR
 
@@ -27,7 +27,9 @@ def test_clean_corpus_postconditions(spark):
 
     # no near-dup pair survives at the removal threshold (banding is
     # deterministic, so re-running finds any remaining pair)
-    assert minhash_near_dup(cleaned, "doc_id", "text", threshold=0.7).count() == 0
+    assert minhash_jaccard_pairs(
+        cleaned, "doc_id", "text", threshold=0.7, num_hashes=16, bands=4, max_bucket_size=100
+    ).count() == 0
 
     # quality gate respected + annotations present
     rows = cleaned.select("n_tokens", "unique_ratio", "lang_guess").collect()

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from sport_data_pipeline_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
-    minhash_near_dup,
+    minhash_jaccard_pairs,
     simhash_near_dup,
 )
 
@@ -43,7 +43,8 @@ def test_jaccard_pairs_finds_near_dup(docs):
 
 def test_minhash_agrees_with_exact_jaccard_on_dups(docs):
     got = {(r["id_a"], r["id_b"]) for r in
-           minhash_near_dup(docs, "doc_id", "text", threshold=0.5, shingle_n=2).collect()}
+           minhash_jaccard_pairs(docs, "doc_id", "text", threshold=0.5, shingle_n=2,
+                                 num_hashes=16, bands=4, max_bucket_size=100).collect()}
     # exact duplicates can never be missed (identical signatures in every band)
     assert (0, 3) in got
     # verification step guarantees no false positives below threshold

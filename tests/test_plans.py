@@ -347,11 +347,15 @@ def test_dup_span_profile_no_expand_semi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_minhash_jaccard_composite_no_nested_loop(spark):
-    # the composite's pair join must form via the banded-LSH bucket
+@pytest.mark.parametrize(
+    "name", ["minhash_jaccard_neardup", "minhash_neardup", "incremental_dedup_minhash"]
+)
+def test_minhash_jaccard_composite_no_nested_loop(spark, name):
+    # every MinHash-LSH pair join — with block keys, without them, and the
+    # one-sided batch × corpus join — must form via the banded-LSH bucket
     # equi-join (ids only; shingle sets rejoin after candidate dedup) —
     # never a nested loop or cartesian expansion
-    plan = physical_plan(SPECS["minhash_jaccard_neardup"].fn(spark, SF_DIR))
+    plan = physical_plan(SPECS[name].fn(spark, SF_DIR))
     spark.catalog.clearCache()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

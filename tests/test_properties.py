@@ -2,8 +2,8 @@
 header codecs round-trip arbitrary valid parameters, and resize geometry
 keeps its invariants on any input. These run driver-side (no Spark), so
 hypothesis can afford hundreds of examples. The file-level upsert
-(``merge_into_parquet``) properties at the end run on Spark and keep
-their example counts small."""
+(``merge_into_parquet``) and MinHash near-dup properties at the end run
+on Spark and keep their example counts small."""
 
 from __future__ import annotations
 
@@ -490,3 +490,86 @@ def test_single_key_updates_rewrite_one_file_and_do_not_fragment(spark, tmp_path
     got = spark.read.parquet(target)
     assert got.count() == n and got.select("k").distinct().count() == n
 
+
+# ---------------------------------------------------------------------------
+# MinHash-LSH near-dup: random small corpora against the exact verifiers.
+
+DOC_DDL = "doc_id long, blk string, text string"
+
+
+@st.composite
+def near_dup_corpora(draw):
+    """Base docs over a small vocabulary, planted copies with 0-2 edits
+    (a word replaced or appended; 0 = an identical text), docs shorter
+    than the 3-token shingle, and one or two block values."""
+    word = st.integers(0, 24).map(lambda i: f"w{i}")
+    blocks = draw(st.sampled_from([["x"], ["x", "y"]]))
+    docs = []
+    for base in draw(st.lists(st.lists(word, min_size=3, max_size=16), min_size=1, max_size=6)):
+        docs.append((draw(st.sampled_from(blocks)), base))
+        for _ in range(draw(st.integers(0, 4))):
+            copy = list(base)
+            for _ in range(draw(st.integers(0, 2))):
+                if draw(st.booleans()):
+                    copy.append(draw(word))
+                else:
+                    copy[draw(st.integers(0, len(copy) - 1))] = draw(word)
+            docs.append((draw(st.sampled_from(blocks)), copy))
+    for short in draw(st.lists(st.lists(word, max_size=2), max_size=3)):
+        docs.append((draw(st.sampled_from(blocks)), short))
+    order = draw(st.permutations(range(len(docs))))
+    return [(i, docs[j][0], " ".join(docs[j][1])) for i, j in enumerate(order)]
+
+
+@given(rows=near_dup_corpora(), threshold=st.sampled_from([0.3, 0.5, 0.8]))
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_minhash_jaccard_pairs_subset_of_exact_property(spark, rows, threshold):
+    from sport_data_pipeline_spark.operators.dedup import jaccard_pairs, minhash_jaccard_pairs
+
+    df = spark.createDataFrame(rows, DOC_DDL)
+    blk = {i: b for i, b, _ in rows}
+    text = {i: t for i, _, t in rows}
+    try:
+        for block_cols in ([], ["blk"]):
+            exact = {(r.id_a, r.id_b): r.jaccard for r in jaccard_pairs(
+                df, "doc_id", "text", block_cols, threshold, shingle_n=3).collect()}
+            lsh = {(r.id_a, r.id_b): r.jaccard for r in minhash_jaccard_pairs(
+                df, "doc_id", "text", block_cols, threshold, shingle_n=3).collect()}
+            assert all(exact.get(p) == j for p, j in lsh.items()), (block_cols, lsh, exact)
+            if block_cols:
+                assert all(blk[a] == blk[b] for a, b in lsh)
+            twins = {
+                (a, b) for a in text for b in text
+                if a < b and text[a] == text[b] and len(text[a].split()) >= 3
+                and (not block_cols or blk[a] == blk[b])
+            }
+            assert twins <= set(lsh), (block_cols, twins - set(lsh))
+    finally:
+        spark.catalog.clearCache()
+
+
+@given(rows=near_dup_corpora(), threshold=st.sampled_from([0.3, 0.5, 0.8]))
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_incremental_dedup_minhash_routes_within_blocked_property(spark, rows, threshold):
+    from sport_data_pipeline_spark.operators.dedup import incremental_dedup
+
+    df = spark.createDataFrame(rows, DOC_DDL)
+    batch, corpus = df.filter("doc_id % 3 = 0"), df.filter("doc_id % 3 <> 0")
+
+    def routes(**kw):
+        return {r.doc_id: (r.status, r.match_id) for r in incremental_dedup(
+            batch, corpus, "doc_id", "text", ["blk"], threshold=threshold, shingle_n=3,
+            **kw).collect()}
+
+    try:
+        blocked, lsh = routes(), routes(minhash_candidates=(32, 16))
+    finally:
+        spark.catalog.clearCache()
+    assert blocked.keys() == lsh.keys()
+    exact = {i: m for i, (s, m) in blocked.items() if s == "dup_exact"}
+    assert exact == {i: m for i, (s, m) in lsh.items() if s == "dup_exact"}
+    for i, (status, match) in lsh.items():
+        if status == "near_dup":
+            assert blocked[i][0] == "near_dup" and blocked[i][1] <= match, (i, blocked[i], match)
