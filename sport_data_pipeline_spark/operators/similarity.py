@@ -1,23 +1,38 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k is the exact baseline (a cross join that Catalyst
-executes as broadcast-nested-loop when the query side is small — the right
-plan: the query set is broadcast once, the corpus streams). The LSH variant
-buckets by random-hyperplane signs so only same-bucket candidates compare —
-the 100 TB path where even one corpus pass per query batch must be avoided.
+Every search here is candidate generation followed by an exact verify.
+The broadcast cross join (``cosine_topk``, ``hard_negative_topk``), IVF
+list probes (``ivf_topk``) and a PQ-ADC shortlist (``pq_topk``) differ
+only in WHICH pairs meet; the pairs then score with the same guarded
+cosine (``_cosine``) and rank with the same window (``_top_k``). The
+near-dup self-joins meet pairs on a block grid (``_grid_sides``) or in
+LSH buckets; semantic dedup routes through k-means cells
+(``_nearest_cell``) and verifies with the same cosine
+(``_dedup_status``). Brute-force cosine top-k is the exact baseline: a
+cross join that Catalyst executes as broadcast-nested-loop when the
+query side is small — the query set is broadcast once, the corpus
+streams.
 
-Dot products fold sequentially inside a single row (F.aggregate), so
-results are deterministic — no float reduction across partitions.
+Dot products fold sequentially inside a single row, so results are
+deterministic — no float reduction across partitions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential-fold dot product.
+def _fold(
+    a: Column | str,
+    b: Column | str | None,
+    term: Callable[[Column, Column], Column],
+    dim: int | None = None,
+) -> Column:
+    """``0.0 + term(a[1], b[1]) + term(a[2], b[2]) + …``, added left to
+    right; ``b=None`` folds ``term(a[i], a[i])``.
 
     With ``dim`` known, unrolls to a flat ``element_at`` sum — the same
     left-to-right addition order as the fold (bit-identical result), but
@@ -31,29 +46,54 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     if dim is not None:
         s: Column = F.lit(0.0)
         for i in range(1, dim + 1):
-            s = s + F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
+            x = F.element_at(a, i)
+            s = s + term(x, x if b is None else F.element_at(b, i))
         return s
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    terms = F.transform(a, lambda x: term(x, x)) if b is None else F.zip_with(a, b, term)
+    return F.aggregate(terms, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        s: Column = F.lit(0.0)
-        for i in range(1, dim + 1):
-            x = F.element_at(a, i).cast("double")
-            s = s + x * x
-        return F.sqrt(s)
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+def _product(x: Column, y: Column) -> Column:
+    return x.cast("double") * y.cast("double")
+
+
+def _dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+    return _fold(a, b, _product, dim)
+
+
+def _norm(a: Column | str, dim: int | None = None) -> Column:
+    return F.sqrt(_fold(a, None, _product, dim))
+
+
+def _cosine(a: str, n_a: str, b: str, n_b: str, dim: int | None = None) -> Column:
+    """Cosine of vector columns ``a``, ``b`` given their norm columns; a
+    zero-norm side defines cosine 0."""
+    return F.when(
+        (F.col(n_a) > 0) & (F.col(n_b) > 0),
+        _dot(F.col(a), F.col(b), dim) / (F.col(n_a) * F.col(n_b)),
+    ).otherwise(F.lit(0.0))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Rank ``(query_id, neighbor_id, cosine)`` rows per query — cosine
+    descending, ties to the lower neighbor id, so output is deterministic —
+    and keep ranks ≤ ``k``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def cell_vectors(
+    df: DataFrame, id_col: str, vec_col: str = "embedding", dim: int | None = None
+) -> DataFrame:
+    """The prepared vector frame the semantic cell index is built and
+    folded from: ``(__cid, __cv, __cn)`` — id, raw vector, its norm — with
+    zero-norm rows dropped (they define cosine 0 and can never clear a
+    positive threshold)."""
+    return df.select(
+        F.col(id_col).alias("__cid"),
+        F.col(vec_col).alias("__cv"),
+        _norm(F.col(vec_col), dim).alias("__cn"),
+    ).filter(F.col("__cn") > 0)
 
 
 def cosine_topk(
@@ -83,19 +123,13 @@ def cosine_topk(
         _norm(F.col(corpus_vec), dim).alias("__cn"),
     )
     pairs = F.broadcast(q).crossJoin(c).filter(F.col("__qid") != F.col("__cid"))
-    cos = F.when(
-        (F.col("__qn") > 0) & (F.col("__cn") > 0),
-        _dot(F.col("__qv"), F.col("__cv"), dim) / (F.col("__qn") * F.col("__cn")),
-    ).otherwise(F.lit(0.0))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
+    return _top_k(
         pairs.select(
             F.col("__qid").alias("query_id"),
             F.col("__cid").alias("neighbor_id"),
-            cos.alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+            _cosine("__qv", "__qn", "__cv", "__cn", dim).alias("cosine"),
+        ),
+        k,
     )
 
 
@@ -123,8 +157,8 @@ def build_ivf_index(
     from ..sources.sinks import write_partitioned
 
     # repartition by id before the fit: parallel training on single-file
-    # input, and the same layout as the inline path so the same seed
-    # reproduces the same centroids (k-means|| init samples per partition)
+    # input, and a fixed layout so the same seed reproduces the same
+    # centroids (k-means|| init samples per partition)
     n_parts = corpus.sparkSession.sparkContext.defaultParallelism
     feat = corpus.repartition(n_parts, F.col(corpus_id)).withColumn(
         "__feat", array_to_vector(F.col(corpus_vec).cast("array<double>"))
@@ -142,57 +176,36 @@ def build_ivf_index(
 
 def ivf_topk(
     queries: DataFrame,
-    corpus: DataFrame | str,
+    corpus: str,
     query_id: str,
     corpus_id: str,
     query_vec: str = "embedding",
     corpus_vec: str = "embedding",
     k: int = 5,
-    n_lists: int = 16,
     n_probe: int = 2,
-    seed: int = 42,
     dim: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: each query probes only its
     ``n_probe`` nearest centroid lists and ranks exact cosine inside them.
 
-    ``corpus`` is normally the PATH of a prebuilt ``build_ivf_index``
-    output: probe lists collect to the driver (n_queries × n_probe ints —
+    ``corpus`` is the PATH of a prebuilt :func:`build_ivf_index` output —
+    the k-means quantizer is fitted at write time, never in the query
+    path. Probe lists collect to the driver (n_queries × n_probe ints —
     the probe batch is small by definition) and become a static
     ``__list IN (...)`` filter, so the scan shows PartitionFilters and
-    reads n_probe/n_lists of the files. Passing a DataFrame instead fits
-    the quantizer inline — a convenience for ad-hoc/small corpora only;
-    the iterative KMeans job then runs inside the query path, which is
-    exactly what the index exists to avoid at scale.
+    reads n_probe/n_lists of the files.
 
     Returns (query_id, neighbor_id, cosine, rank). Recall < 1 by design —
     raise ``n_probe`` to trade cost for recall.
     """
     spark = queries.sparkSession
-    if isinstance(corpus, str):
-        assigned = spark.read.parquet(corpus).select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("__cv"),
-            _norm(F.col(corpus_vec), dim).alias("__cn"),
-            F.col("__list"),
-        )
-        cdf = spark.read.parquet(f"{corpus}/_ivf_centroids")
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        n_parts = spark.sparkContext.defaultParallelism
-        c_feat = corpus.repartition(n_parts, F.col(corpus_id)).select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("__cv"),
-            _norm(F.col(corpus_vec), dim).alias("__cn"),
-            array_to_vector(F.col(corpus_vec).cast("array<double>")).alias("__feat"),
-        ).persist()
-        km = KMeans(k=n_lists, seed=seed, featuresCol="__feat", predictionCol="__list")
-        model = km.fit(c_feat)
-        assigned = model.transform(c_feat).select("neighbor_id", "__cv", "__cn", "__list")
-        centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-        cdf = spark.createDataFrame(centroids, "__list int, __centroid array<double>")
+    assigned = spark.read.parquet(corpus).select(
+        F.col(corpus_id).alias("neighbor_id"),
+        F.col(corpus_vec).alias("__cv"),
+        _norm(F.col(corpus_vec), dim).alias("__cn"),
+        F.col("__list"),
+    )
+    cdf = spark.read.parquet(f"{corpus}/_ivf_centroids")
 
     # each query ranks centroids by exact cosine and keeps the top n_probe
     q = queries.select(
@@ -213,23 +226,39 @@ def ivf_topk(
         .filter(F.col("__pr") <= n_probe)
         .select("query_id", "__qv", "__qn", "__list")
     )
-    if isinstance(corpus, str):
-        # static partition pruning: the probed list ids become a literal IN
-        # filter on the partition column before the join
-        lists = sorted({r["__list"] for r in probed.select("__list").distinct().collect()})
-        assigned = assigned.filter(F.col("__list").isin(lists))
+    # static partition pruning: the probed list ids become a literal IN
+    # filter on the partition column before the join
+    lists = sorted({r["__list"] for r in probed.select("__list").distinct().collect()})
+    assigned = assigned.filter(F.col("__list").isin(lists))
 
     pairs = probed.join(assigned, "__list").filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = F.when(
-        (F.col("__qn") > 0) & (F.col("__cn") > 0),
-        _dot(F.col("__qv"), F.col("__cv"), dim) / (F.col("__qn") * F.col("__cn")),
-    ).otherwise(F.lit(0.0))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return _top_k(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            _cosine("__qv", "__qn", "__cv", "__cn", dim).alias("cosine"),
+        ).dropDuplicates(["query_id", "neighbor_id"]),
+        k,
+    )
+
+
+def _grid_sides(v: DataFrame, n_blocks: int) -> tuple[DataFrame, DataFrame]:
+    """Replicate the rows of ``v`` (keyed by ``__id``) onto the
+    upper-triangular ``n_blocks`` × ``n_blocks`` block grid: a row hashes
+    to block g and serves cells (g, j) for j in [g, n_blocks-1] on the row
+    side and cells (i, g) for i in [0, g] on the column side; cell id =
+    i·n_blocks + j. Every unordered pair of rows meets in exactly one cell
+    (the diagonal cell receives each block's rows once per side). Returns
+    ``(row side, column side)``, each ``v``'s columns plus ``__cell``."""
+    b = n_blocks
+    g = v.withColumn("__g", F.pmod(F.xxhash64(F.col("__id")), F.lit(b)))
+
+    def side(cells: Column) -> DataFrame:
+        return g.select(F.explode(cells).alias("__cell"), *v.columns)
+
     return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        side(F.transform(F.sequence(F.col("__g"), F.lit(b - 1)), lambda j: F.col("__g") * b + j)),
+        side(F.transform(F.sequence(F.lit(0), F.col("__g")), lambda i: i * b + F.col("__g"))),
     )
 
 
@@ -268,38 +297,18 @@ def embedding_near_dup(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
         _norm(F.col(vec_col), dim).alias("__n"),
     ).filter(F.col("__n") > 0)
-    g = F.pmod(F.xxhash64(F.col("__id")), F.lit(b))
-    # row side: vector in block g serves cells (g, j) for j in [g, b-1];
-    # col side: cells (i, g) for i in [0, g]. Cell id = i*b + j. The
-    # diagonal cell receives each block's vectors once per side; id_a <
-    # id_b dedups within it.
-    a_side = (
-        v.withColumn("__g", g)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.col("__g"), F.lit(b - 1)),
-                    lambda j: F.col("__g") * b + j,
-                )
-            ).alias("__cell"),
-            F.col("__id").alias("id_a"),
-            F.col("__v").alias("__va"),
-            F.col("__n").alias("__na"),
-        )
+    rows, cols = _grid_sides(v, b)
+    a_side = rows.select(
+        "__cell",
+        F.col("__id").alias("id_a"),
+        F.col("__v").alias("__va"),
+        F.col("__n").alias("__na"),
     )
-    b_side = (
-        v.withColumn("__g", g)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("__g")),
-                    lambda i: i * b + F.col("__g"),
-                )
-            ).alias("__cell"),
-            F.col("__id").alias("id_b"),
-            F.col("__v").alias("__vb"),
-            F.col("__n").alias("__nb"),
-        )
+    b_side = cols.select(
+        "__cell",
+        F.col("__id").alias("id_b"),
+        F.col("__v").alias("__vb"),
+        F.col("__n").alias("__nb"),
     )
     # Off-diagonal cells pair distinct blocks, so every unordered pair
     # meets exactly once with the a/b role fixed by block — only the
@@ -406,76 +415,6 @@ def lsh_threshold_pairs(
     )
 
 
-def lsh_bucketed_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    query_vec: str = "embedding",
-    corpus_vec: str = "embedding",
-    k: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane LSH bucket join, exact cosine
-    within buckets. Deterministic planes derived from xxhash64(seed, plane,
-    component) — reproducible across runs without storing plane matrices.
-
-    Recall < 1.0 by construction (rows per bucket shrink 2^n_planes); use
-    more tables / fewer planes to trade cost for recall.
-    """
-
-    def signature(vec: str) -> Column:
-        # plane p component i weight = xxhash64(seed, p, i) scaled to [-1, 1]
-        bits = [
-            F.when(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec),
-                        F.transform(
-                            F.sequence(F.lit(0), F.lit(dim - 1)),
-                            lambda i: (
-                                F.xxhash64(F.lit(seed), F.lit(p), i).cast("double")
-                                / F.lit(float(2**63))
-                            ),
-                        ),
-                        lambda x, wgt: x.cast("double") * wgt,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                > 0,
-                1,
-            ).otherwise(0)
-            for p in range(n_planes)
-        ]
-        sig = F.lit(0)
-        for b in bits:
-            sig = sig * 2 + b
-        return sig
-
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv"),
-        _norm(F.col(query_vec), dim).alias("__qn"), signature(query_vec).alias("__bucket"),
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("__cv"),
-        _norm(F.col(corpus_vec), dim).alias("__cn"), signature(corpus_vec).alias("__bucket"),
-    )
-    pairs = q.join(c, "__bucket").filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = F.when(
-        (F.col("__qn") > 0) & (F.col("__cn") > 0),
-        _dot(F.col("__qv"), F.col("__cv"), dim) / (F.col("__qn") * F.col("__cn")),
-    ).otherwise(F.lit(0.0))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def cosine_topk_arrow(
     queries: DataFrame,
     corpus: DataFrame,
@@ -516,18 +455,19 @@ def cosine_topk_arrow(
             f"than max_queries={max_queries} rows. Batch the probes (or raise "
             f"max_queries deliberately) instead of streaming a corpus through it."
         )
+    id_type = corpus.schema[corpus_id].dataType.simpleString()
+    out_schema = (
+        f"query_id {queries.schema[query_id].dataType.simpleString()}, "
+        f"neighbor_id {id_type}, cosine double"
+    )
+    if qp.empty:  # no probe: nothing to stack or score
+        return _top_k(corpus.sparkSession.createDataFrame([], out_schema), k)
     qids = qp[query_id].to_numpy()
     Q = np.stack(qp[query_vec].to_numpy()).astype(np.float64)
     qn = np.linalg.norm(Q, axis=1)
     qn[qn == 0] = np.inf  # zero vectors score 0 against everything
     Qn = Q / qn[:, None]
     bc = corpus.sparkSession.sparkContext.broadcast((qids, Qn))
-
-    id_type = corpus.schema[corpus_id].dataType.simpleString()
-    out_schema = (
-        f"query_id {queries.schema[query_id].dataType.simpleString()}, "
-        f"neighbor_id {id_type}, cosine double"
-    )
 
     def score(batches):
         b_qids, b_Qn = bc.value
@@ -557,8 +497,7 @@ def cosine_topk_arrow(
         .select(F.col(corpus_id), F.col(corpus_vec))
         .mapInPandas(score, out_schema)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(local, k)
 
 
 def hard_negative_topk(
@@ -600,34 +539,16 @@ def hard_negative_topk(
         .crossJoin(c)
         .filter(F.col("query_label") != F.col("neighbor_label"))
     )
-    cos = F.when(
-        (F.col("__qn") > 0) & (F.col("__cn") > 0),
-        _dot(F.col("__qv"), F.col("__cv"), dim) / (F.col("__qn") * F.col("__cn")),
-    ).otherwise(F.lit(0.0))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
+    return _top_k(
         pairs.select(
             F.col("__qid").alias("query_id"),
             "query_label",
             F.col("__cid").alias("neighbor_id"),
             "neighbor_label",
-            cos.alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+            _cosine("__qv", "__qn", "__cv", "__cn", dim).alias("cosine"),
+        ),
+        k,
     )
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ): the memory-side ANN index. IVF prunes WHICH
-# vectors a query reads; PQ shrinks WHAT is read per vector — m sub-space
-# codebooks of `codes` centroids each turn a dim-float vector into m small
-# ints (64 floats -> 8 bytes here, 32x), so the ADC scan streams the codes
-# table instead of the raw vectors. All vectors are L2-normalized first, so
-# squared-L2 ADC distance ranks exactly like cosine and the recall contract
-# can compare against the exact-cosine baseline.
-# ---------------------------------------------------------------------------
-
 
 
 def incremental_semantic_dedup(
@@ -676,14 +597,19 @@ def incremental_semantic_dedup(
         F.col(vec_col).alias("__cv"),
         _norm(F.col(vec_col), dim).alias("__cn"),
     )
-    cos = F.when(
-        (F.col("__bn") > 0) & (F.col("__cn") > 0),
-        _dot(F.col("__bv"), F.col("__cv"), dim) / (F.col("__bn") * F.col("__cn")),
-    ).otherwise(F.lit(0.0))
+    return _dedup_status(b, F.broadcast(b).crossJoin(c), threshold, id_col, dim)
+
+
+def _dedup_status(
+    b: DataFrame, pairs: DataFrame, threshold: float, id_col: str, dim: int | None
+) -> DataFrame:
+    """The exact verify and routing tail of semantic dedup: ``pairs``
+    (batch ``__bid, __bv, __bn`` × corpus ``__cid, __cv, __cn``) whose
+    cosine clears ``threshold`` give each batch id its smallest matching
+    corpus id; every row of the batch ``b`` gets ``(id, status, match_id)``
+    — 'semantic_dup' with a match, else 'kept'."""
     matches = (
-        F.broadcast(b)
-        .crossJoin(c)
-        .filter(cos >= F.lit(threshold))
+        pairs.filter(_cosine("__bv", "__bn", "__cv", "__cn", dim) >= F.lit(threshold))
         .groupBy("__bid")
         .agg(F.min("__cid").alias("match_id"))
     )
@@ -752,13 +678,11 @@ def incremental_semantic_dedup_routed(
     """
     if threshold <= 0:
         raise ValueError("cell-bound routing requires threshold > 0")
-    c = corpus.select(
-        F.col(id_col).alias("__cid"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col), dim).alias("__cn"),
-    ).filter(F.col("__cn") > 0)  # zero-norm corpus rows can never match
     assigned, cells = build_semantic_cell_index(
-        c, n_cells=n_cells, seed=seed, target_cell_size=target_cell_size
+        cell_vectors(corpus, id_col, vec_col, dim),
+        n_cells=n_cells,
+        seed=seed,
+        target_cell_size=target_cell_size,
     )
     return _route_with_cells(batch, assigned, cells, id_col, vec_col, threshold, dim)
 
@@ -770,8 +694,8 @@ def build_semantic_cell_index(
     target_cell_size: int = 512,
 ) -> tuple[DataFrame, list[tuple[int, list[float], float]]]:
     """WRITE-TIME half of the cell-bound routing: fit k-means on the unit
-    vectors of a prepared corpus frame (columns ``__cid, __cv, __cn``,
-    zero-norms already excluded), assign every vector to its nearest cell,
+    vectors of a :func:`cell_vectors` frame (``__cid, __cv, __cn``,
+    zero-norms excluded), assign every vector to its nearest cell,
     and measure each cell's radius ``max ‖x̂ − c‖``.
 
     Returns ``(assigned, cells)``: the corpus frame with a ``__cell``
@@ -825,13 +749,11 @@ def write_semantic_cell_index(
     :func:`route_against_cell_index` — no fit in the query path.
 
     Returns the number of cells fitted."""
-    c = corpus.select(
-        F.col(id_col).alias("__cid"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-    ).filter(F.col("__cn") > 0)
     assigned, cells = build_semantic_cell_index(
-        c, n_cells=n_cells, seed=seed, target_cell_size=target_cell_size
+        cell_vectors(corpus, id_col, vec_col),
+        n_cells=n_cells,
+        seed=seed,
+        target_cell_size=target_cell_size,
     )
     # co-locate cells before the partitioned write: at most k tasks (hash
     # partitioning may fold two cells into one task — layout is unaffected,
@@ -882,29 +804,48 @@ def route_against_cell_index(
     return _route_with_cells(batch, assigned, cells, id_col, vec_col, threshold, dim)
 
 
-def _unit_dist_expr(dim: int | None) -> Column:
-    """``‖__cv/__cn − __centroid‖`` as an expression: the zip_with fold for
-    unknown dims, or (with ``dim``) the codegen-able element_at unroll —
-    same left-to-right addition order, bit-identical (see ``_dot``)."""
-    if dim is not None:
-        s: Column = F.lit(0.0)
-        for i in range(1, dim + 1):
-            d = F.element_at("__cv", i).cast("double") / F.col("__cn") - F.element_at(
-                "__centroid", i
-            )
-            s = s + d * d
-        return F.sqrt(s)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                "__cv",
-                "__centroid",
-                lambda x, cc: (x.cast("double") / F.col("__cn") - cc)
-                * (x.cast("double") / F.col("__cn") - cc),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+def _nearest_cell(
+    vectors: DataFrame,
+    centers: list[tuple[int, list[float]]],
+    dist: Callable[[Column], Column],
+    id_col: str,
+) -> DataFrame:
+    """Argmin of ``dist(centroid)`` over ``centers`` — ``(cell id,
+    centroid)`` pairs: adds ``__cell`` (ties → lowest cell id) and ``__d``,
+    the winning distance.
+
+    Up to ``_ASSIGN_EXPR_MAX_K`` cells the argmin is map-only over the
+    centroid LITERALS: one distance per centroid, and the first centroid
+    attaining the minimum wins — the cells are sorted by id, so the
+    when-chain's first-match rule IS the lowest-id tie-break. No k-fold
+    row blowup, no exchange, no sort. Above it the centroid table
+    broadcasts and a ``row_number`` per ``id_col`` over ``(__d, __cell)``
+    picks the same cell — the same total order; the blowup is bounded per
+    task and AQE splits skewed cells. Both paths evaluate the identical
+    ``dist`` expression, so the chosen cell and ``__d`` agree bit for bit.
+    """
+    centers = sorted(centers, key=lambda t: t[0])
+    if len(centers) <= _ASSIGN_EXPR_MAX_K:
+        ds = [dist(F.array(*[F.lit(float(x)) for x in v])) for _, v in centers]
+        dmin = ds[0] if len(ds) == 1 else F.least(*ds)
+        cell_expr = F.when(ds[0] == dmin, F.lit(centers[0][0]))
+        for (cell, _), d in zip(centers[1:], ds[1:]):
+            cell_expr = cell_expr.when(d == dmin, F.lit(cell))
+        return vectors.withColumn("__cell", cell_expr.cast("int")).withColumn(
+            "__d", dmin
         )
+    cent = F.broadcast(
+        vectors.sparkSession.createDataFrame(
+            centers, "__cell int, __centroid array<double>"
+        )
+    )
+    w = Window.partitionBy(id_col).orderBy("__d", "__cell")
+    return (
+        vectors.crossJoin(cent)
+        .withColumn("__d", dist(F.col("__centroid")))
+        .withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") == 1)
+        .drop("__rk", "__centroid")
     )
 
 
@@ -913,68 +854,26 @@ def assign_to_cells(
     cells: list[tuple[int, list[float], float]],
     dim: int | None = None,
 ) -> DataFrame:
-    """Map each prepared vector row (``__cid, __cv, __cn``; norms > 0) to
-    its nearest EXISTING cell — the incremental-fold half of the cell
-    index: newly kept vectors join the index without refitting centroids
-    (production refits at compaction time). Returns the frame with
-    ``__cell`` and ``__d`` (unit-space distance, for radius updates)."""
-    spark = vectors.sparkSession
-    if len(cells) <= _ASSIGN_EXPR_MAX_K:
-        # r15 map-only argmin (see semantic_dedup_cells): one unit-space
-        # distance fold per centroid LITERAL, first centroid attaining
-        # the minimum wins (ties → lowest cell id — the same (d, cell)
-        # total order the window path used). No k-fold row blowup, no
-        # exchange, no sort; each fold is the identical expression, so
-        # __cell and __d are bit-identical to the former shape. The list
-        # is sorted by cell id first so the when-chain's first-match rule
-        # IS the lowest-id tie-break.
-        cells = sorted(cells, key=lambda t: t[0])
-        ds = []
-        for _i, v, _r in cells:
-            cent_lit = F.array(*[F.lit(float(x)) for x in v])
-            if dim is not None:
-                s: Column = F.lit(0.0)
-                for j in range(1, dim + 1):
-                    dj = F.element_at("__cv", j).cast("double") / F.col(
-                        "__cn"
-                    ) - F.element_at(cent_lit, j)
-                    s = s + dj * dj
-                ds.append(F.sqrt(s))
-            else:
-                ds.append(
-                    F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                "__cv",
-                                cent_lit,
-                                lambda x, cc: (x.cast("double") / F.col("__cn") - cc)
-                                * (x.cast("double") / F.col("__cn") - cc),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                    )
-                )
-        dmin = ds[0] if len(ds) == 1 else F.least(*ds)
-        cell_expr = F.when(ds[0] == dmin, F.lit(cells[0][0]))
-        for idx in range(1, len(ds)):
-            cell_expr = cell_expr.when(ds[idx] == dmin, F.lit(cells[idx][0]))
-        return vectors.withColumn("__cell", cell_expr.cast("int")).withColumn(
-            "__d", dmin
-        )
-    cent = F.broadcast(
-        spark.createDataFrame(
-            [(i, v) for i, v, _ in cells], "__cell int, __centroid array<double>"
-        )
-    )
-    unit_dist = _unit_dist_expr(dim)
-    w = Window.partitionBy("__cid").orderBy("__d", "__cell")
-    return (
-        vectors.crossJoin(cent)
-        .withColumn("__d", unit_dist)
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .drop("__rk", "__centroid")
+    """Map each :func:`cell_vectors` row to its nearest EXISTING cell —
+    the incremental-fold half of the cell index: newly kept vectors join
+    the index without refitting centroids (production refits at compaction
+    time). Returns the frame with ``__cell`` and ``__d`` (unit-space
+    distance ``‖__cv/__cn − centroid‖``, for radius updates)."""
+
+    def unit_sq(x: Column, c: Column) -> Column:
+        # try_divide, not `/`: a join on __cell (the routing verify) pushes
+        # isnotnull(__cell) down beside cell_vectors' __cn > 0, and
+        # subexpression elimination evaluates this fold — repeated in the
+        # argmin — on every row before the AND short-circuits, zero-norm
+        # rows included, where ANSI `/` raises. Same quotient when __cn > 0.
+        d = F.try_divide(x.cast("double"), F.col("__cn")) - c
+        return d * d
+
+    return _nearest_cell(
+        vectors,
+        [(i, v) for i, v, _ in cells],
+        lambda c: F.sqrt(_fold("__cv", c, unit_sq, dim)),
+        "__cid",
     )
 
 
@@ -1005,48 +904,30 @@ def _route_with_cells(
         _norm(F.col(vec_col), dim).alias("__bn"),
     )
     live_b = b.filter(F.col("__bn") > 0)
-    if dim is not None:
-        q_dot_c: Column = F.lit(0.0)
-        for i in range(1, dim + 1):
-            q_dot_c = q_dot_c + F.element_at("__bv", i).cast("double") / F.col(
-                "__bn"
-            ) * F.element_at("__centroid", i)
-    else:
-        q_dot_c = F.aggregate(
-            F.zip_with(
-                "__bv", "__centroid", lambda x, cc: x.cast("double") / F.col("__bn") * cc
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    q_dot_c = _fold(
+        "__bv", "__centroid", lambda x, c: x.cast("double") / F.col("__bn") * c, dim
+    )
     cand = (
         live_b.crossJoin(radii)
         .filter(q_dot_c + F.col("__r") >= F.lit(threshold - _CELL_BOUND_EPS))
         .select("__bid", "__bv", "__bn", "__cell")
     )
-    # ---- exact verify on raw vectors (identical fold to the base op) ----
-    cos = F.when(
-        (F.col("__bn") > 0) & (F.col("__cn") > 0),
-        _dot(F.col("__bv"), F.col("__cv"), dim) / (F.col("__bn") * F.col("__cn")),
-    ).otherwise(F.lit(0.0))
-    matches = (
-        F.broadcast(cand)
-        .join(assigned.select("__cell", "__cid", "__cv", "__cn"), "__cell")
-        .filter(cos >= F.lit(threshold))
-        .groupBy("__bid")
-        .agg(F.min("__cid").alias("match_id"))
+    # exact verify on raw vectors: the base operator's tail
+    pairs = F.broadcast(cand).join(
+        assigned.select("__cell", "__cid", "__cv", "__cn"), "__cell"
     )
-    return (
-        b.select("__bid")
-        .join(matches, "__bid", "left")
-        .select(
-            F.col("__bid").alias(id_col),
-            F.when(F.col("match_id").isNull(), F.lit("kept"))
-            .otherwise(F.lit("semantic_dup"))
-            .alias("status"),
-            "match_id",
-        )
-    )
+    return _dedup_status(b, pairs, threshold, id_col, dim)
+
+
+# ---------------------------------------------------------------------------
+# Product quantization (PQ): the memory-side ANN index. IVF prunes WHICH
+# vectors a query reads; PQ shrinks WHAT is read per vector — m sub-space
+# codebooks of `codes` centroids each turn a dim-float vector into m small
+# ints (64 floats -> 8 bytes here, 32x), so the ADC scan streams the codes
+# table instead of the raw vectors. All vectors are L2-normalized first, so
+# squared-L2 ADC distance ranks exactly like cosine and the recall contract
+# can compare against the exact-cosine baseline.
+# ---------------------------------------------------------------------------
 
 
 def _unit(vec: Column, dim: int) -> Column:
@@ -1204,15 +1085,13 @@ def pq_topk(
         _norm(F.col(query_vec), dim).alias("__qn"),
     )
     re = c.join(F.broadcast(short), "neighbor_id").join(F.broadcast(qv), "query_id")
-    cos = F.when(
-        (F.col("__qn") > 0) & (F.col("__cn") > 0),
-        _dot(F.col("__qv"), F.col("__cv"), dim) / (F.col("__qn") * F.col("__cn")),
-    ).otherwise(F.lit(0.0))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        re.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _top_k(
+        re.select(
+            "query_id",
+            "neighbor_id",
+            _cosine("__qv", "__qn", "__cv", "__cn", dim).alias("cosine"),
+        ),
+        k,
     )
 
 
@@ -1416,7 +1295,10 @@ def semantic_dedup_cells(
 
     feat = live.repartition(n_parts, F.col(id_col))
     if n_cells is None:
-        n_cells = auto_n_cells(live.count(), target_cell_size)
+        n_live = live.count()
+        if not n_live:  # nothing to cluster: every row is a zero-norm passthrough
+            return zero
+        n_cells = auto_n_cells(n_live, target_cell_size)
     if n_cells < 2:
         # degenerate single-cell mode: the cell graph IS the global graph
         # — exact, but one task does all pairs. Test/verify mode only;
@@ -1445,55 +1327,15 @@ def semantic_dedup_cells(
                 kmeans_fit_sample(feat, "__v", id_col, n_cells, seed, max_iter=max_iter)
             )
         ]
-        if len(centers) <= _ASSIGN_EXPR_MAX_K:
-            # r15 (guide §2.4 remove shuffles outright): map-only argmin
-            # over the centroid LITERALS — one d2 fold per centroid, pick
-            # the first centroid attaining the minimum (ties → lowest
-            # cell id, same total order as the window it replaces). The
-            # former crossJoin+row_number shape blew each vector up k-fold
-            # and paid an exchange + sort on n·k rows just to argmin k
-            # numbers per row. Each fold is the IDENTICAL left-to-right
-            # zip_with sum, so the chosen cell is bit-identical.
-            d2s = [
-                F.aggregate(
-                    F.zip_with(
-                        "__v",
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                for _, c in centers
-            ]
-            dmin = d2s[0] if len(d2s) == 1 else F.least(*d2s)
-            cell_expr = F.when(d2s[0] == dmin, F.lit(0))
-            for i in range(1, len(d2s)):
-                cell_expr = cell_expr.when(d2s[i] == dmin, F.lit(i))
-            assigned = feat.withColumn("__cell", cell_expr.cast("int"))
-        else:
-            # large-k (scale) path: broadcast centroid table; the blowup
-            # is bounded per task and AQE splits skewed cells.
-            cent0 = F.broadcast(
-                spark.createDataFrame(centers, "__cell int, __centroid array<double>")
-            )
-            raw_d2 = F.aggregate(
-                F.zip_with(
-                    "__v",
-                    "__centroid",
-                    lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            w_assign = Window.partitionBy(id_col).orderBy("__d2", "__cell")
-            assigned = (
-                feat.crossJoin(cent0)
-                .withColumn("__d2", raw_d2)
-                .withColumn("__rk", F.row_number().over(w_assign))
-                .filter(F.col("__rk") == 1)
-                .drop("__rk", "__d2", "__centroid")
-            )
+        # nearest centroid by raw-space squared distance (map-only for
+        # small k, see _nearest_cell)
+        def sq_diff(x: Column, c: Column) -> Column:
+            d = x.cast("double") - c
+            return d * d
+
+        assigned = _nearest_cell(
+            feat, centers, lambda c: _fold("__v", c, sq_diff), id_col
+        )
     cent = F.broadcast(
         spark.createDataFrame(centers, "__cell int, __centroid array<double>")
     )
@@ -1603,30 +1445,10 @@ def embedding_near_dup_arrow(
         F.col(vec_col).alias("__v"),
         _norm(F.col(vec_col)).alias("__n"),
     ).filter(F.col("__n") > 0)
-    g = F.pmod(F.xxhash64(F.col("__id")), F.lit(b))
-    a_side = v.withColumn("__g", g).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.col("__g"), F.lit(b - 1)), lambda j: F.col("__g") * b + j
-            )
-        ).alias("__cell"),
-        F.lit(0).alias("__side"),
-        F.col("__id"),
-        F.col("__v"),
-        F.col("__n"),
+    rows, cols = _grid_sides(v, b)
+    staged = rows.select("__cell", F.lit(0).alias("__side"), "__id", "__v", "__n").unionByName(
+        cols.select("__cell", F.lit(1).alias("__side"), "__id", "__v", "__n")
     )
-    b_side = v.withColumn("__g", g).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("__g")), lambda i: i * b + F.col("__g")
-            )
-        ).alias("__cell"),
-        F.lit(1).alias("__side"),
-        F.col("__id"),
-        F.col("__v"),
-        F.col("__n"),
-    )
-    staged = a_side.unionByName(b_side)
 
     out_schema = "id_a long, id_b long, cosine double"
 

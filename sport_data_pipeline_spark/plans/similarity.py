@@ -385,7 +385,7 @@ def ivf_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     index = _ivf_index_path(spark, sf_dir, n_lists=8)
-    return ivf_topk(queries, index, "vec_id", "vec_id", k=5, n_lists=8, n_probe=2, dim=64)
+    return ivf_topk(queries, index, "vec_id", "vec_id", k=5, n_probe=2, dim=64)
 
 
 # IVF is approximate by design, so its RESULT has no SQL oracle — but its
@@ -419,7 +419,7 @@ def ivf_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 8)
     index = _ivf_index_path(spark, sf_dir, n_lists=8)
     exact = cosine_topk(queries, emb, "vec_id", "vec_id", k=5)
-    approx = ivf_topk(queries, index, "vec_id", "vec_id", k=5, n_lists=8, n_probe=4, dim=64)
+    approx = ivf_topk(queries, index, "vec_id", "vec_id", k=5, n_probe=4, dim=64)
     hits = (
         approx.select("query_id", "neighbor_id")
         .join(exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi")
@@ -1718,7 +1718,7 @@ def _sem_ingest_process_batch(
     cell table for restart. Module-level (not a closure) so the restart
     path is directly testable: a fresh run passes ``{"cells": None}`` and
     the table reloads from ``cells_dir``."""
-    from ..operators.similarity import _norm, _route_with_cells, assign_to_cells
+    from ..operators.similarity import _route_with_cells, assign_to_cells, cell_vectors
 
     if cells_holder.get("cells") is None:  # stream (re)start
         # heal any compaction swap a prior run's crash left committed-but-
@@ -1749,14 +1749,8 @@ def _sem_ingest_process_batch(
         _route_with_cells(batch, state, cell_list, "vec_id", "embedding", tau, dim=dim)
     )  # cut lineage before state append
     epoch_write(routed, routed_dir, epoch)
-    kept = (
-        batch.join(routed.filter(F.col("status") == "kept"), "vec_id", "left_semi")
-        .select(
-            F.col("vec_id").alias("__cid"),
-            F.col("embedding").alias("__cv"),
-            _norm(F.col("embedding")).alias("__cn"),
-        )
-        .filter(F.col("__cn") > 0)
+    kept = cell_vectors(
+        batch.join(routed.filter(F.col("status") == "kept"), "vec_id", "left_semi"), "vec_id"
     )
     folded = assign_to_cells(kept, cell_list, dim=dim)
     # radius running-max per cell (≤ k rows to the driver)
@@ -1805,7 +1799,7 @@ def stream_semantic_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time as _time
 
-    from ..operators.similarity import _norm, build_semantic_cell_index
+    from ..operators.similarity import build_semantic_cell_index, cell_vectors
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus0 = emb.filter(F.expr(_SEM_CORPUS))
@@ -1820,11 +1814,7 @@ def stream_semantic_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{tmp}/cells",
             f"{tmp}/ckpt",
         )
-        prepared0 = corpus0.select(
-            F.col("vec_id").alias("__cid"),
-            F.col("embedding").alias("__cv"),
-            _norm(F.col("embedding")).alias("__cn"),
-        ).filter(F.col("__cn") > 0)
+        prepared0 = cell_vectors(corpus0, "vec_id")
         # AUTO-sized cells (k = ceil(n / target_cell_size)): pinning k=8 was
         # the r9 structured-replica probe's finding — a fixed cell count
         # lets per-cell membership (and radii) grow with the corpus, so

@@ -272,11 +272,12 @@ def test_late_dup_ticks_broadcast_watermark_single_dedup_shuffle(spark):
     assert plan.count("row_number") <= 2  # one dedup window (plan prints it twice max)
 
 
-def test_hard_negative_mining_broadcasts_probe_set(spark):
+@pytest.mark.parametrize("name", ["embedding_topk", "hard_negative_mining"])
+def test_hard_negative_mining_broadcasts_probe_set(spark, name):
     # probe set broadcasts, corpus streams: the only join is the broadcast
-    # nested-loop the crossJoin implies, with the label-mismatch predicate
-    # applied inside it — no shuffle of the corpus.
-    plan = physical_plan(SPECS["hard_negative_mining"].fn(spark, SF_DIR))
+    # nested-loop the crossJoin implies (hard_negative_mining applies its
+    # label-mismatch predicate inside it) — no shuffle of the corpus.
+    plan = physical_plan(SPECS[name].fn(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
 

@@ -2,8 +2,8 @@
 header codecs round-trip arbitrary valid parameters, and resize geometry
 keeps its invariants on any input. These run driver-side (no Spark), so
 hypothesis can afford hundreds of examples. The file-level upsert
-(``merge_into_parquet``) and MinHash near-dup properties at the end run
-on Spark and keep their example counts small."""
+(``merge_into_parquet``), MinHash near-dup and cosine-kernel properties at
+the end run on Spark and keep their example counts small."""
 
 from __future__ import annotations
 
@@ -573,3 +573,130 @@ def test_incremental_dedup_minhash_routes_within_blocked_property(spark, rows, t
     for i, (status, match) in lsh.items():
         if status == "near_dup":
             assert blocked[i][0] == "near_dup" and blocked[i][1] <= match, (i, blocked[i], match)
+
+
+# ---------------------------------------------------------------------------
+# Cosine kernel: top-k against a pure-Python reference, and the near-dup and
+# routed semantic-dedup operators against their sibling operators.
+
+VEC_DDL = "vec_id long, label long, embedding array<float>"
+
+
+@st.composite
+def tied_vectors(draw):
+    """Vector sets of dim 3-8 with one zero vector, exact copies and
+    power-of-two scaled copies, so cosines tie bit for bit. Components are
+    half-integers: exact in float32, so the float → double cast is exact.
+    Returns (dim, [(vec_id, label, vector)])."""
+    dim = draw(st.integers(3, 8))
+    comp = st.integers(-4, 4).map(lambda i: i / 2)
+    vec = st.lists(comp, min_size=dim, max_size=dim).filter(any)
+    base = draw(st.lists(vec, min_size=2, max_size=6))
+    vecs = [[0.0] * dim] + base
+    for v in base:
+        for _ in range(draw(st.integers(0, 2))):
+            scale = draw(st.sampled_from([1.0, 2.0, 0.5]))
+            vecs.append([x * scale for x in v])
+    order = draw(st.permutations(range(len(vecs))))
+    return dim, [(i, draw(st.integers(0, 2)), vecs[j]) for i, j in enumerate(order)]
+
+
+def _fold_ref(xs, ys):
+    s = 0.0
+    for x, y in zip(xs, ys):
+        s = s + x * y
+    return s
+
+
+def _cosine_ref(a, b):
+    import math
+
+    na, nb = math.sqrt(_fold_ref(a, a)), math.sqrt(_fold_ref(b, b))
+    return _fold_ref(a, b) / (na * nb) if na > 0 and nb > 0 else 0.0
+
+
+def _top_k_ref(rows, k, keep):
+    """{(query_id, neighbor_id, cosine, rank)}: every row queries every
+    row ``keep`` admits, cosine descending, ties to the lower id."""
+    out = set()
+    for qid, ql, qv in rows:
+        ranked = sorted(
+            (-_cosine_ref(qv, cv), cid) for cid, cl, cv in rows if keep(qid, ql, cid, cl)
+        )
+        out |= {(qid, cid, -neg, r) for r, (neg, cid) in enumerate(ranked[:k], 1)}
+    return out
+
+
+def _ranked(df):
+    return {(r.query_id, r.neighbor_id, r.cosine, r.rank) for r in df.collect()}
+
+
+@given(case=tied_vectors(), k=st.integers(1, 4))
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_cosine_topk_equals_reference_property(spark, case, k):
+    from sport_data_pipeline_spark.operators.similarity import cosine_topk
+
+    dim, rows = case
+    df = spark.createDataFrame(rows, VEC_DDL)
+    want = _top_k_ref(rows, k, lambda q, _ql, c, _cl: q != c)
+    for d in (None, dim):
+        assert _ranked(cosine_topk(df, df, "vec_id", "vec_id", k=k, dim=d)) == want, d
+
+
+@given(case=tied_vectors(), k=st.integers(1, 4))
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_hard_negative_topk_equals_reference_property(spark, case, k):
+    from sport_data_pipeline_spark.operators.similarity import hard_negative_topk
+
+    dim, rows = case
+    df = spark.createDataFrame(rows, VEC_DDL)
+    want = _top_k_ref(rows, k, lambda _q, ql, _c, cl: ql != cl)
+    for d in (None, dim):
+        got = hard_negative_topk(df, df, "vec_id", "vec_id", "label", k=k, dim=d)
+        assert _ranked(got) == want, d
+
+
+@given(case=tied_vectors(), threshold=st.sampled_from([0.0, 0.5, 0.9]))
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_embedding_near_dup_arrow_equals_expression_property(spark, case, threshold):
+    from sport_data_pipeline_spark.operators.similarity import (
+        embedding_near_dup,
+        embedding_near_dup_arrow,
+    )
+
+    _, rows = case
+    df = spark.createDataFrame(rows, VEC_DDL)
+    want = {
+        (a, b, _cosine_ref(va, vb))
+        for a, _, va in rows for b, _, vb in rows
+        if a < b and any(va) and any(vb) and _cosine_ref(va, vb) >= threshold
+    }
+    for n_blocks in (1, 3):
+        expr = {tuple(r) for r in embedding_near_dup(
+            df, "vec_id", threshold=threshold, n_blocks=n_blocks).collect()}
+        arrow = {tuple(r) for r in embedding_near_dup_arrow(
+            df, "vec_id", threshold=threshold, n_blocks=n_blocks).collect()}
+        assert expr == arrow == want, n_blocks
+
+
+@given(case=tied_vectors(), threshold=st.sampled_from([0.3, 0.8, 0.99]))
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_routed_semantic_dedup_equals_unrouted_property(spark, case, threshold):
+    from sport_data_pipeline_spark.operators.similarity import (
+        build_semantic_cell_index,
+        cell_vectors,
+        incremental_semantic_dedup,
+        route_against_cell_index,
+    )
+
+    dim, rows = case
+    df = spark.createDataFrame(rows, VEC_DDL)
+    batch, corpus = df.filter("vec_id % 3 = 0"), df.filter("vec_id % 3 <> 0")
+    index = build_semantic_cell_index(cell_vectors(corpus, "vec_id"), target_cell_size=2)
+    routed = route_against_cell_index(batch, *index, "vec_id", threshold=threshold, dim=dim)
+    unrouted = incremental_semantic_dedup(batch, corpus, "vec_id", threshold=threshold)
+    assert sorted(routed.collect()) == sorted(unrouted.collect())

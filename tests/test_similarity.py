@@ -9,7 +9,6 @@ from sport_data_pipeline_spark.operators.similarity import (
     cosine_topk,
     embedding_near_dup,
     ivf_topk,
-    lsh_bucketed_topk,
 )
 
 from conftest import SF_DIR
@@ -36,7 +35,11 @@ def test_exact_topk_shape_and_order(emb):
         assert qid not in {n for _, _, n in rows}  # self excluded
 
 
-def test_ivf_recall_vs_exact(emb):
+def test_ivf_recall_vs_exact(emb, tmp_path):
+    from sport_data_pipeline_spark.operators.similarity import build_ivf_index
+
+    idx = str(tmp_path / "ivf_idx")
+    build_ivf_index(emb, "vec_id", idx, n_lists=8)
     q = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r["query_id"], r["neighbor_id"])
@@ -44,7 +47,7 @@ def test_ivf_recall_vs_exact(emb):
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(q, emb, "vec_id", "vec_id", k=3, n_lists=8, n_probe=4).collect()
+        for r in ivf_topk(q, idx, "vec_id", "vec_id", k=3, n_probe=4).collect()
     }
     # probing half the lists should recover a majority of true neighbors
     assert len(approx & exact) >= len(exact) * 0.5
@@ -57,13 +60,6 @@ def test_embedding_neardup_threshold_and_ordering(emb):
     assert len(out) > 0
     assert all(r["id_a"] < r["id_b"] for r in out)  # each pair once
     assert all(r["cosine"] >= 0.4 for r in out)
-
-
-def test_lsh_bucketed_runs(emb):
-    q = emb.filter(F.col("vec_id") < 3)
-    out = lsh_bucketed_topk(q, emb, "vec_id", "vec_id", k=3, n_planes=4).collect()
-    # buckets shrink the candidate set; results are a subset of valid pairs
-    assert all(r["rank"] <= 3 for r in out)
 
 
 def test_arrow_topk_agrees_with_exact(emb):
@@ -82,6 +78,18 @@ def test_arrow_topk_agrees_with_exact(emb):
     # swap neighbors whose cosines agree to ~1 ulp
     assert len(arrow & exact) >= len(exact) - 1
     assert len(arrow) == len(exact)
+
+
+def test_arrow_topk_empty_probe_set_returns_empty_frame(emb):
+    """An empty probe set yields zero rows with the output schema, as
+    cosine_topk does — not a numpy stack error on the driver."""
+    from sport_data_pipeline_spark.operators.similarity import cosine_topk_arrow
+
+    q = emb.filter(F.col("vec_id") < 0)
+    out = cosine_topk_arrow(q, emb, "vec_id", "vec_id", k=4)
+    exact = cosine_topk(q, emb, "vec_id", "vec_id", k=4)
+    assert out.columns == exact.columns == ["query_id", "neighbor_id", "cosine", "rank"]
+    assert out.collect() == exact.collect() == []
 
 
 def test_grid_join_matches_pairs_across_blockings(emb):
@@ -135,25 +143,6 @@ def test_lsh_threshold_pairs_recall_on_planted_neardups(spark):
         for r in lsh_threshold_pairs(df, "vec_id", threshold=0.85, dim=dim).collect()
     }
     assert lsh == exact  # recall 1.0 on this corpus, no false positives
-
-
-def test_ivf_indexed_probe_matches_inline(emb, spark, tmp_path):
-    """Path-based (write-time index) IVF returns the same result as the
-    inline-fit variant with the same seed, and reads only probed lists."""
-    from sport_data_pipeline_spark.operators.similarity import build_ivf_index
-
-    idx = str(tmp_path / "ivf_idx")
-    build_ivf_index(emb, "vec_id", idx, n_lists=8)
-    q = emb.filter(F.col("vec_id") < 5)
-    inline = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in ivf_topk(q, emb, "vec_id", "vec_id", k=3, n_lists=8, n_probe=4).collect()
-    }
-    indexed = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in ivf_topk(q, idx, "vec_id", "vec_id", k=3, n_lists=8, n_probe=4).collect()
-    }
-    assert indexed == inline
 
 
 def test_pq_encode_codes_in_range_and_deterministic(emb):
@@ -292,6 +281,21 @@ def test_semantic_dedup_cells_auto_k_scales_with_corpus(spark):
     kept = {r["vec_id"] for r in routed if r["kept"]}
     assert all(r["keep_id"] in kept for r in routed)  # keepers are kept rows
     assert all((r["keep_id"] == r["vec_id"]) == r["kept"] for r in routed)
+
+
+def test_semantic_dedup_cells_all_zero_input_passes_through(spark):
+    """With no nonzero vector there is nothing to cluster: every row comes
+    back kept as its own keeper, as zero-norm rows always do."""
+    from sport_data_pipeline_spark.operators.similarity import semantic_dedup_cells
+
+    df = spark.createDataFrame(
+        [(i, [0.0, 0.0, 0.0]) for i in range(3)], "vec_id long, embedding array<float>"
+    )
+    for verify in (False, True):
+        out = semantic_dedup_cells(df, "vec_id", threshold=0.7, verify_neighbors=verify)
+        assert sorted(tuple(r) for r in out.collect()) == [
+            (i, i, True) + ((False,) if verify else ()) for i in range(3)
+        ]
 
 
 def test_semantic_dedup_cells_verify_neighbors_column(spark):
@@ -569,8 +573,8 @@ def test_stream_semantic_restart_reloads_radii_bit_identical(spark, tmp_path):
     unbroken 4-epoch run, bit-for-bit."""
     from sport_data_pipeline_spark.catalog import load_table
     from sport_data_pipeline_spark.operators.similarity import (
-        _norm,
         build_semantic_cell_index,
+        cell_vectors,
     )
     from sport_data_pipeline_spark.plans.similarity import (
         _SEM_CORPUS,
@@ -582,15 +586,7 @@ def test_stream_semantic_restart_reloads_radii_bit_identical(spark, tmp_path):
 
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     streamed = emb.filter(~F.expr(_SEM_CORPUS))
-    prepared0 = (
-        emb.filter(F.expr(_SEM_CORPUS))
-        .select(
-            F.col("vec_id").alias("__cid"),
-            F.col("embedding").alias("__cv"),
-            _norm(F.col("embedding")).alias("__cn"),
-        )
-        .filter(F.col("__cn") > 0)
-    )
+    prepared0 = cell_vectors(emb.filter(F.expr(_SEM_CORPUS)), "vec_id")
 
     def seed(base):
         assigned0, cells0 = build_semantic_cell_index(prepared0, target_cell_size=128)

@@ -29,8 +29,8 @@ def main() -> None:
     from sport_data_pipeline_spark.catalog import load_table
     from sport_data_pipeline_spark.operators.similarity import (
         _CELL_BOUND_EPS,
-        _norm,
         build_semantic_cell_index,
+        cell_vectors,
     )
     from sport_data_pipeline_spark.session import get_session
 
@@ -42,11 +42,7 @@ def main() -> None:
     corpus = emb.filter(F.expr("vec_id % 5 = 0"))
     batch = emb.filter(~F.expr("vec_id % 5 = 0"))
 
-    prepared = corpus.select(
-        F.col("vec_id").alias("__cid"),
-        F.col("embedding").alias("__cv"),
-        _norm(F.col("embedding")).alias("__cn"),
-    ).filter(F.col("__cn") > 0)
+    prepared = cell_vectors(corpus, "vec_id")
     assigned, cells = build_semantic_cell_index(prepared, target_cell_size=target)
     dim = len(cells[0][1])
 
@@ -55,11 +51,11 @@ def main() -> None:
             cells, "__cell int, __centroid array<double>, __r double"
         )
     )
-    b = batch.select(
-        F.col("vec_id").alias("__bid"),
-        F.col("embedding").alias("__bv"),
-        _norm(F.col("embedding"), dim).alias("__bn"),
-    ).filter(F.col("__bn") > 0)
+    b = cell_vectors(batch, "vec_id", dim=dim).select(
+        F.col("__cid").alias("__bid"),
+        F.col("__cv").alias("__bv"),
+        F.col("__cn").alias("__bn"),
+    )
     q_dot_c = F.lit(0.0)
     for i in range(1, dim + 1):
         q_dot_c = q_dot_c + F.element_at("__bv", i).cast("double") / F.col(

@@ -54,10 +54,10 @@ def main() -> None:
 
     from sport_data_pipeline_spark.catalog import load_table
     from sport_data_pipeline_spark.operators.similarity import (
-        _norm,
         _route_with_cells,
         assign_to_cells,
         build_semantic_cell_index,
+        cell_vectors,
     )
     from sport_data_pipeline_spark.session import get_session
     from sport_data_pipeline_spark.sources.sinks import compact_parquet
@@ -84,11 +84,7 @@ def main() -> None:
     batch_sec: list[float] = []
     state_trend: list[tuple[int, int]] = []
     try:
-        prepared0 = corpus0.select(
-            F.col("vec_id").alias("__cid"),
-            F.col("embedding").alias("__cv"),
-            _norm(F.col("embedding")).alias("__cn"),
-        ).filter(F.col("__cn") > 0)
+        prepared0 = cell_vectors(corpus0, "vec_id")
         assigned0, cells0 = build_semantic_cell_index(prepared0, n_cells=n_cells)
         assigned0.write.parquet(state_dir)
         cells = {c: (v, r) for c, v, r in cells0}
@@ -123,16 +119,11 @@ def main() -> None:
                 batch, state, cell_list, "vec_id", "embedding", tau, dim=dim
             ).localCheckpoint(eager=True)
             routed.write.mode("append").parquet(routed_dir)
-            kept = (
+            kept = cell_vectors(
                 batch.join(
                     routed.filter(F.col("status") == "kept"), "vec_id", "left_semi"
-                )
-                .select(
-                    F.col("vec_id").alias("__cid"),
-                    F.col("embedding").alias("__cv"),
-                    _norm(F.col("embedding")).alias("__cn"),
-                )
-                .filter(F.col("__cn") > 0)
+                ),
+                "vec_id",
             )
             folded = assign_to_cells(kept, cell_list, dim=dim)
             for r in folded.groupBy("__cell").agg(F.max("__d").alias("__m")).collect():
