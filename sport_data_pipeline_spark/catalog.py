@@ -9,11 +9,25 @@ the loaders here read the flat per-table files the test harness provides.
 Reference parity: the reference's analytics load tables with
 ``execute_query`` → pandas (src/analytics/engine.py:262-292); here every
 table is a lazy DataFrame and nothing is collected.
+
+Schema resolution: a table's parquet schema is inferred once per file
+version, not on every load. Inference is a Spark job (a footer read, ~0.1 s
+of driver time) that the API's repeated queries would otherwise start again
+for every table they load. The first load of a path infers the schema; later
+loads pass it to the reader, which starts no job but still lists the path, so
+new files show up. The schema is reused while the path's identity — size and
+mtime of a file, or the sorted (name, size, mtime) of every data file under a
+directory — and ``spark.sql.legacy.parquet.nanosAsLong`` are unchanged; any
+rewrite of the files infers again and replaces the path's one entry. Paths
+that are not on the local filesystem are inferred on every load.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 #: All tables the driver test harness provides.
 TABLES = (
@@ -34,6 +48,59 @@ TABLES = (
 #: though they broadcast fine at test scale; at 100 TB they shuffle.
 BROADCAST_DIMS = frozenset({"region", "nation"})
 
+#: The conf that changes what inference returns for these tables (how
+#: events' TIMESTAMP(NANOS) column arrives).
+_INFERENCE_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+#: ``absolute path -> (version key, schema)``, one entry per path read. A
+#: schema is a pure function of its key, so every session of the process may
+#: share it. No lock: racing loads each store a key with the schema inferred
+#: after the key was taken, and a key that no longer matches the files is
+#: never reused.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _is_data_name(name: str) -> bool:
+    """Whether Spark's file listing keeps this name: it skips hidden and
+    ``_``-prefixed names (``_SUCCESS``, ``_temporary``) but not ``_x=v``
+    partition directories."""
+    return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
+
+def _file_version(path: str) -> tuple | None:
+    """The identity of the parquet file or directory at ``path``, or None
+    when it is not on the local filesystem or changes while it is listed."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_size, st.st_mtime_ns)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if _is_data_name(d)]
+            for name in filter(_is_data_name, names):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only for a file
+    version it has not seen (see the module docstring)."""
+    version = _file_version(path)
+    if version is None:
+        return spark.read.parquet(path)
+    key = (version, spark.conf.get(_INFERENCE_CONF))
+    slot = os.path.abspath(path)
+    hit = _SCHEMAS.get(slot)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[slot] = (key, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Handles the events table's nanosecond timestamps.
@@ -49,7 +116,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # session; set it here so the conversion is self-contained rather
         # than relying on the caller having gone through get_session.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/events.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -60,7 +127,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # (which has no NTZ/TZ split for these files) reads it.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1140,6 +1140,15 @@ def kmeans_fit_sample(
     clusters keep their previous center. Returns the k centroids (k is
     capped at the sample size).
     """
+    x = _kmeans_sample(df, vec_col, order_col, sample_cap)
+    if len(x) == 0:
+        raise ValueError("kmeans_fit_sample: empty input")
+    return _kmeans_fit(x, k, seed, max_iter)
+
+
+def _kmeans_sample(df: DataFrame, vec_col: str, order_col: str, sample_cap: int):
+    """The deterministic bounded sample of ``kmeans_fit_sample`` as an
+    ``(n, dim)`` float64 array (n = 0 for empty input)."""
     import numpy as np
 
     rows = (
@@ -1148,10 +1157,14 @@ def kmeans_fit_sample(
         .limit(sample_cap)
         .collect()
     )
-    x = np.asarray([r["__x"] for r in rows], dtype=np.float64)
+    return np.asarray([r["__x"] for r in rows], dtype=np.float64)
+
+
+def _kmeans_fit(x, k: int, seed: int, max_iter: int) -> list[list[float]]:
+    """Seeded k-means++ init + Lloyd on a non-empty sample ``x``."""
+    import numpy as np
+
     n = len(x)
-    if n == 0:
-        raise ValueError("kmeans_fit_sample: empty input")
     k = min(k, n)
     rng = np.random.default_rng(seed)
     centers = [x[int(rng.integers(n))]]
@@ -1303,8 +1316,11 @@ def semantic_dedup_cells(
         # degenerate single-cell mode: the cell graph IS the global graph
         # — exact, but one task does all pairs. Test/verify mode only;
         # never the scale path.
+        first = feat.select("__v").first()
+        if first is None:  # nothing to cluster (see the n_cells=None path)
+            return zero
         assigned = feat.withColumn("__cell", F.lit(0))
-        dim_n = len(feat.select("__v").first()["__v"])
+        dim_n = len(first["__v"])
         means = live.agg(
             *[F.avg(F.element_at("__v", i + 1)).alias(f"m{i}") for i in range(dim_n)]
         ).first()
@@ -1321,12 +1337,12 @@ def semantic_dedup_cells(
         # broadcast-centroid argmin; the converged-sample centroids keep
         # cell balance at least as good as the truncated Lloyd they
         # replace (probed: max-cell share unchanged at sf0.1).
-        centers = [
-            (i, c)
-            for i, c in enumerate(
-                kmeans_fit_sample(feat, "__v", id_col, n_cells, seed, max_iter=max_iter)
-            )
-        ]
+        # kmeans_fit_sample in two halves: its sample is also the free
+        # emptiness signal for an explicit n_cells
+        sample = _kmeans_sample(feat, "__v", id_col, _KMEANS_SAMPLE_CAP)
+        if len(sample) == 0:
+            return zero
+        centers = list(enumerate(_kmeans_fit(sample, n_cells, seed, max_iter)))
         # nearest centroid by raw-space squared distance (map-only for
         # small k, see _nearest_cell)
         def sq_diff(x: Column, c: Column) -> Column:

@@ -924,10 +924,11 @@ def incremental_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.expr(_INCR_CORPUS.replace("//", "div")))
     tmp = tempfile.mkdtemp(prefix="sdp_dedup_idx_")
     try:
-        build_dedup_index(
-            corpus, "doc_id", "text", ["lang", "source"], shingle_n=3
-        ).write.parquet(f"{tmp}/index")
-        index = spark.read.parquet(f"{tmp}/index")
+        idx = build_dedup_index(corpus, "doc_id", "text", ["lang", "source"], shingle_n=3)
+        idx.write.parquet(f"{tmp}/index")
+        # read back with the schema just written: no inference job (a
+        # per-call tmp path has no place in catalog's schema cache)
+        index = spark.read.schema(idx.schema).parquet(f"{tmp}/index")
         # distributed materialization (r11, same reasoning as the
         # e2e_daily_pipeline fix): stage_checkpoint severs the lineage from
         # the tmp dirs `finally` deletes, keeping the routing table on

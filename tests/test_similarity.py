@@ -283,16 +283,20 @@ def test_semantic_dedup_cells_auto_k_scales_with_corpus(spark):
     assert all((r["keep_id"] == r["vec_id"]) == r["kept"] for r in routed)
 
 
-def test_semantic_dedup_cells_all_zero_input_passes_through(spark):
+@pytest.mark.parametrize("n_cells", [None, 1, 4])
+def test_semantic_dedup_cells_all_zero_input_passes_through(spark, n_cells):
     """With no nonzero vector there is nothing to cluster: every row comes
-    back kept as its own keeper, as zero-norm rows always do."""
+    back kept as its own keeper, as zero-norm rows always do — whether the
+    cell count is auto-sized or given."""
     from sport_data_pipeline_spark.operators.similarity import semantic_dedup_cells
 
     df = spark.createDataFrame(
         [(i, [0.0, 0.0, 0.0]) for i in range(3)], "vec_id long, embedding array<float>"
     )
     for verify in (False, True):
-        out = semantic_dedup_cells(df, "vec_id", threshold=0.7, verify_neighbors=verify)
+        out = semantic_dedup_cells(
+            df, "vec_id", threshold=0.7, n_cells=n_cells, verify_neighbors=verify
+        )
         assert sorted(tuple(r) for r in out.collect()) == [
             (i, i, True) + ((False,) if verify else ()) for i in range(3)
         ]
