@@ -44,7 +44,11 @@ def weighted_sample(
     takes k per stratum via ONE window over the strata hash partitioning,
     with the rank filter pushed below the shuffle as a WindowGroupLimit.
     At 100 TB either form costs one corpus scan plus a k-row (or
-    k-per-stratum) reduce.
+    k-per-stratum) reduce. A global k at or above
+    ``session.TOPK_SORT_FALLBACK`` (10**6; a "take every row" k such as
+    10**9) plans as a range-partitioned sort plus limit instead: one
+    exchange, and the sort spills, where TakeOrderedAndProject would
+    reserve a 2k-slot buffer per task and exhaust the heap.
 
     Returns ``df``'s columns plus ``w`` (int), ``skey`` (long), and — for
     the stratified form — ``rk`` (long, 1-based within the stratum);

@@ -355,6 +355,16 @@ def lsh_threshold_pairs(
     ``embedding_near_dup`` when the threshold is low (<0.7): there the
     geometry makes any pruning lossy.
 
+    The hyperplanes are data, not expression text: a broadcast plane
+    table holds one ``(t, p, __bit, __w)`` row per plane
+    (``n_tables·n_planes`` rows, ``__bit = 1 << p``, ``__w`` the ``dim``
+    weights). Each vector meets every plane in a broadcast nested-loop
+    join, takes its sign bit there from one ``_dot`` (the kernel the
+    verify step uses), and the bits sum to a signature per
+    ``(vector, table)``. The plan holds one ``dim``-term dot however many
+    planes there are; written out per plane, 8 × 12 × 64 products in one
+    projection exhausted a 6 GB heap while planning.
+
     Returns (id_a, id_b, cosine) with cosine >= threshold.
     """
     v = df.select(
@@ -362,29 +372,26 @@ def lsh_threshold_pairs(
         _norm(F.col(vec_col), dim).alias("__n"),
     ).filter(F.col("__n") > 0).persist(StorageLevel.MEMORY_AND_DISK)
 
-    def plane_weight(t: int, p: int, i: int) -> Column:
-        # deterministic pseudo-random weight in [-1, 1]
-        h = F.xxhash64(F.lit(seed), F.lit(t), F.lit(p), F.lit(i))
-        return (h.cast("double") / F.lit(float(1 << 63)))
-
-    def table_sig(t: int) -> Column:
-        bits = []
-        for p in range(n_planes):
-            dot = F.lit(0.0)
-            for i in range(1, dim + 1):
-                dot = dot + F.element_at(F.col("__v"), i).cast("double") * plane_weight(t, p, i)
-            bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(1 << p))
-        sig = bits[0]
-        for x in bits[1:]:
-            sig = sig + x
-        return sig.cast("long")
-
-    tabled = v.select(
-        "__id", "__v", "__n",
-        F.explode(
-            F.array(*[F.struct(F.lit(t).alias("t"), table_sig(t).alias("sig")) for t in range(n_tables)])
-        ).alias("__b"),
-    ).select("__id", "__v", "__n", "__b.t", "__b.sig")
+    # weight i of plane (t, p) = xxhash64(seed, t, p, i) / 2^63, in
+    # [-1, 1]; xxhash64 hashes by type, and t, p, i are all ints
+    planes = df.sparkSession.createDataFrame(
+        [(t, p, 1 << p) for t in range(n_tables) for p in range(n_planes)],
+        "t int, p int, __bit long",
+    ).withColumn(
+        "__w",
+        F.transform(
+            F.sequence(F.lit(1), F.lit(dim)),
+            lambda i: F.xxhash64(F.lit(seed), F.col("t"), F.col("p"), i).cast("double")
+            / F.lit(float(1 << 63)),
+        ),
+    )
+    bit = F.when(_dot(F.col("__v"), F.col("__w"), dim) >= 0, F.col("__bit")).otherwise(0)
+    tabled = (
+        v.crossJoin(F.broadcast(planes))
+        .select("__id", "t", bit.alias("__bit"))
+        .groupBy("__id", "t")
+        .agg(F.sum("__bit").alias("sig"))
+    )
 
     bucket_w = Window.partitionBy("t", "sig")
     tabled = (

@@ -531,8 +531,11 @@ def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     no explode, no shuffle), and the global bottom-k plans as
     TakeOrderedAndProject (per-partition top-k, one k-row merge) — the
     same no-global-sort shape as ``kmv_bottomk``. At 100 TB the sample
-    costs one corpus scan plus a k-row reduce. Since r14 the draw is the
-    shared :func:`~...operators.corpus.weighted_sample` operator — the
+    costs one corpus scan plus a k-row reduce. That zero-exchange shape
+    holds for k below ``session.TOPK_SORT_FALLBACK`` (10**6; this query's
+    k is 50); a k at or above it plans as a sort plus limit, which spills
+    rather than reserving a 2k-slot buffer per task. Since r14 the draw
+    is the shared :func:`~...operators.corpus.weighted_sample` operator — the
     same machinery ``clean_corpus(sample_k=…)`` exposes as an engine
     knob."""
     from ..operators.corpus import weighted_sample

@@ -12,6 +12,16 @@ read queries generates (~260 classes for the benchmark's 13-query mix), so a
 repeated query mix evicts its own classes and recompiles all of them on
 every pass. ``get_session`` sizes the cache for the query mix; the conf is
 static, so it only takes effect in a session this module builds.
+
+Top-k sort fallback: Spark plans ``orderBy(...).limit(k)`` as
+TakeOrderedAndProject, and every task then reserves a 2k-slot buffer before
+it reads a row (Guava's ``TopKSelector``). Spark's default threshold is
+``Int.MaxValue - 15``, so a "take every row" k such as 10**9 reserves 2·10^9
+references per task and kills the driver JVM with ``OutOfMemoryError``.
+Both ``get_session`` and ``configure_runtime`` lower the threshold to
+``TOPK_SORT_FALLBACK``: below it the plan stays TakeOrderedAndProject (no
+exchange), at or above it Spark plans a sort plus limit, which spills
+instead of reserving.
 """
 
 from __future__ import annotations
@@ -19,6 +29,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# 2k references × 4 B (8 B on heaps over 32 GB, without compressed oops)
+# = 8-16 MB reserved per task at k = 10**6: 32-64 MB on 4 cores, against
+# the 3 GB heap the benchmark runs with. Each buffered row is a copy on
+# top of its reference, so at this k a task may hold a few hundred MB of
+# rows.
+# Every registered top-k is far smaller (the largest is the KMV sketch's
+# k = 256), so their plans are unchanged.
+TOPK_SORT_FALLBACK = 1_000_000
 
 
 def _local_dir() -> str:
@@ -63,6 +82,7 @@ def get_session(
         # 1000 the rounds after the first compiled none, with no rise in
         # peak RSS (tools/driver_work_probe.py).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK))
         # local mode = driver-only JVM: give it real heap (32 executor
         # threads × shuffle buffers + broadcasts); override via env.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
@@ -104,5 +124,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     # settable, results are partition-layout-invariant by construction.
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    # a huge orderBy().limit(k) sorts instead of reserving a 2k buffer per
+    # task (see the module docstring); runtime-settable.
+    spark.conf.set(
+        "spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK)
     )
     return spark

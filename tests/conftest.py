@@ -35,14 +35,20 @@ def _hard_stop_jvm() -> None:
     exits; clear pyspark's process-level globals so the next get_session
     launches a fresh JVM instead of reusing a dead gateway."""
     from pyspark import SparkContext
-    from pyspark.sql import SparkSession
+    from pyspark.sql import SparkSession, SQLContext
 
-    active = SparkSession._instantiatedSession or SparkSession.getActiveSession()
+    active = SparkSession._instantiatedSession
     if active is not None:
         try:
             active.stop()
         except Exception:
-            pass  # a crashed/killed JVM: still tear the gateway down below
+            # a crashed/killed JVM: stop() gave up before clearing the
+            # session globals, so the next getOrCreate would return this
+            # session; clear them, and tear the gateway down below
+            SparkSession._instantiatedSession = None
+            SparkSession._activeSession = None
+            SQLContext._instantiatedContext = None
+            SparkContext._active_spark_context = None
     gw = SparkContext._gateway
     if gw is not None:
         try:
@@ -60,11 +66,35 @@ def _hard_stop_jvm() -> None:
     SparkContext._jvm = None
 
 
+def _jvm_dead() -> bool:
+    """True when the gateway's java process has exited, or its
+    SparkContext is stopped or unreachable (the JVM is shutting down)."""
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    gw = SparkContext._gateway
+    if gw is None:
+        return False
+    proc = getattr(gw, "proc", None)
+    if proc is not None and proc.poll() is not None:
+        return True
+    sc = SparkContext._active_spark_context
+    try:
+        return sc is not None and sc._jsc.sc().isStopped()
+    except Py4JError:
+        return True
+
+
 @pytest.fixture()
 def spark():
     global _jvm_birth
     from pyspark.sql import SparkSession
 
+    # A test that kills the JVM (an OutOfMemoryError in a task thread
+    # exits it) fails on its own; every later test gets a fresh JVM
+    # instead of the dead session.
+    if _jvm_dead():
+        _hard_stop_jvm()
     alive = SparkSession._instantiatedSession or SparkSession.getActiveSession()
     if (
         alive is not None
