@@ -128,13 +128,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so queries can also be expressed in Spark SQL."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,49 +1,43 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Images/audio/video ride through the engine as ``binary`` columns with a
-metadata struct; decode / resize / frame-sample run as Arrow-batched
-``mapInPandas`` operators so each task processes whole record batches.
+Images, audio and video ride through the engine as ``binary`` payloads in
+MEDIA_SCHEMA rows. Three header operators (``extract_media_dimensions``,
+``extract_audio_meta``, ``sample_frames``) parse container headers and
+pass input columns through.
 
-Decode depth is tiered: ``parse_image_header`` is a REAL pure-stdlib
-decoder of the PNG/JPEG/GIF container headers (signature + dimensions —
-the published container formats, no codec library needed), powering
-``extract_media_dimensions`` and the ``decode_stub=False`` path of
-``extract_features``; ``decode_png_rgb`` goes all the way to PIXELS for
-PNG at the three alpha-free color types — truecolor, grayscale, indexed
-(zlib inflate + all five scanline filters at bpp 3 or 1 — PNG's pixel
-layer needs no codec library), powering ``extract_pixel_stats``; ``decode_gif_rgb``
-does the same for GIF (real variable-width LZW, interlace de-weave,
-multi-frame via ``decode_gif_frames``); ``decode_wav_pcm``
-goes all the way to SAMPLES for WAV — 16-bit PCM plus the G.711
-telephony formats (u-law/A-law, exact ITU-T integer expansion) —
-powering ``extract_audio_stats``; ``decode_jpeg_gray``
-goes all the way to PIXELS for grayscale JPEG (real huffman+DPCM
-entropy decode + IDCT — see the JPEG section), powering
-``extract_jpeg_stats``; and ``parse_mp4_samples`` walks the ISO-BMFF
-sample tables so ``extract_video_frame_stats`` reconstructs every MJPEG
-frame's pixels; color JPEG decodes at ALL THREE common samplings — 4:4:4,
-MCU-interleaved 4:2:0, and 4:2:2 — plus DRI/restart streams AND
-PROGRESSIVE (SOF2) scans: the multi-scan Annex-G path accumulates
-coefficients across spectral-selection / successive-approximation scans
-and IDCTs once at EOI (``decode_jpeg_rgb`` / ``decode_jpeg_gray``
-dispatch on the SOF marker). The sampling gate is GENERIC — any
-Y-subsampled layout with h, v in 1..4 and h*v <= 8 (4:4:0, 4:1:1, and
-the rarer mixes; every accepted layout pinned by
-test_jpeg_sampling_matrix). What remains behind the
-documented seam: subsampled-CHROMA layouts,
+Every stats extractor has ONE operator shape, written once in
+``_map_payloads``: Arrow-batched ``mapInPandas``, a decoder plus a
+per-item reduce inside the executor pass (only stat rows leave it, never
+pixels or samples), one row of ``media_id`` plus NULLs for an
+undecodable or zero-size payload, and pandas dtypes derived from the
+output schema so int64 stats stay exact next to NULLs. The two payload
+rewriters (``resize_image_payloads``, ``resample_wav_payloads``) share
+``_rewrite_payloads``: decode → transform → re-encode into MEDIA_SCHEMA.
+
+The decoders are pure stdlib + numpy, no codec library: PNG
+(``decode_png_rgb``: truecolor, grayscale and indexed, all five scanline
+filters, Adam7), GIF (``decode_gif_rgb``, ``decode_gif_animation``:
+variable-width LZW, interlace, compositing), BMP (incl. RLE8), TIFF
+(none/PackBits/LZW/Deflate, predictor 2), JPEG (``decode_jpeg_gray``,
+``decode_jpeg_rgb``: baseline and progressive, any Y-subsampled layout,
+DRI/restart streams), WAV (``decode_wav_pcm``: PCM, float, G.711, IMA
+ADPCM) and MJPEG video (``parse_mp4_samples`` sample tables, walked frame
+by frame by ``_mjpeg_frames``). MP3 frame chains and FLAC STREAMINFO are
+read as metadata only.
+
+The ``decoder=`` seam: the still-image and audio extractors take a
+``decoder=`` callable (``bytes|None -> decoded|None``) that defaults to
+the pure decoder for their format. One extractor serves every format
+with the same decoded shape through it (``extract_pixel_stats(df,
+decoder=decode_jpeg_rgb)`` is the color-JPEG path), and production swaps
+a native codec in behind the identical operator shape; the throughput
+gap that makes that swap mandatory at real multimodal scale is measured
+in SCALE.md §8i (pure-Python JPEG ~0.2-0.3 MB/s/core vs libjpeg-turbo's
+~100+ — ~400×; the mapInPandas shape itself adds no per-core penalty).
+What stays behind the seam: subsampled-CHROMA JPEG layouts,
 arithmetic-coded and hierarchical JPEG, inter-frame video codecs
-(H.26x/VP9/AV1), and perceptual compressed audio (MP3/AAC/Opus) — genuinely
-library-grade territory. The seam is an INTERFACE, not a comment: every stat extractor
-takes a ``decoder=`` callable (``bytes|None -> decoded|None``, defaulting
-to the pure decoders here), so production swaps in a native codec behind
-the identical operator shape; the throughput gap that makes that swap
-mandatory at real multimodal scale is measured in SCALE.md §8i
-(pure-Python JPEG ~0.2-0.3 MB/s/core vs libjpeg-turbo's ~100+ — ~400×;
-the mapInPandas shape itself adds no per-core penalty).
-``decode_stub=True`` substitutes a deterministic
-byte-histogram feature so that distributed path — schema, batch shape,
-partitioning, null handling — is exercised end to end
-(tests/test_multimodal.py).
+(H.26x/VP9/AV1), and perceptual compressed audio (MP3/AAC/Opus sample
+decode).
 """
 
 from __future__ import annotations
@@ -51,8 +45,9 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -76,18 +71,6 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("mime_type", StringType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("feature", ArrayType(FloatType()), True),
-    ]
-)
-
-FEATURE_DIM = 16
-
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 #: JPEG start-of-frame markers that carry dimensions (baseline, extended
 #: sequential, progressive, lossless, and the differential variants).
@@ -107,17 +90,93 @@ DIMENSIONS_SCHEMA = StructType(
 )
 
 
-def _typed_frame(rows, names, dtypes) -> pd.DataFrame:
-    """Row tuples -> pandas frame with EXPLICIT nullable dtypes per
-    column. Plain ``pd.DataFrame(rows)`` infers a mixed int/None column
-    as float64, which silently rounds int64 magnitudes past 2^53 before
-    Arrow casts back to long — at corpus scale one undecodable payload
-    in a batch would corrupt its neighbors' 64-bit stats. Every stats
-    extractor below builds its output through this helper."""
-    cols = list(zip(*rows)) if rows else [[] for _ in names]
-    return pd.DataFrame(
-        {n: pd.array(list(c), dtype=d) for n, c, d in zip(names, cols, dtypes)}
-    )
+def _as_bytes(payload) -> bytes | None:
+    """An Arrow binary cell as ``bytes``; a NULL payload stays None."""
+    return None if payload is None else bytes(payload)
+
+
+#: Nullable pandas dtype per Spark numeric type; a non-nullable field
+#: takes the plain numpy dtype (``Int64`` -> ``int64``). Other types
+#: (string, array) stay object.
+_PANDAS_DTYPES = {
+    LongType: "Int64",
+    IntegerType: "Int32",
+    DoubleType: "Float64",
+    FloatType: "Float32",
+}
+
+
+def _pandas_dtype(field: StructField):
+    d = _PANDAS_DTYPES.get(type(field.dataType))
+    if d is None:
+        return object
+    return d if field.nullable else d.lower()
+
+
+def _map_payloads(df: DataFrame, schema: StructType, per_item) -> DataFrame:
+    """The one operator shape of every stats extractor: Arrow-batched
+    ``mapInPandas`` over MEDIA_SCHEMA rows into ``schema``, whose first
+    field is ``media_id``.
+
+    ``per_item(bytes | None) -> list[tuple] | None`` decodes and reduces
+    one payload; each tuple is one output row after ``media_id``. None
+    voids the item: one row of its ``media_id`` with every other column
+    NULL, never a crash mid-corpus. An empty list drops the item (the
+    one-to-many source primitives' filter). The reduce runs inside the
+    executor pass, so only these rows leave it, never pixels or samples,
+    and each input Arrow batch yields its own output frame, so a task's
+    worth of decoded output never accumulates in Python.
+
+    Every column gets an explicit pandas dtype derived from ``schema``.
+    Plain ``pd.DataFrame(rows)`` infers a mixed int/None column as
+    float64, which silently rounds int64 magnitudes past 2^53 before
+    Arrow casts back to long: one undecodable payload in a batch would
+    corrupt its neighbours' 64-bit stats."""
+    dtypes = {f.name: _pandas_dtype(f) for f in schema.fields}
+    void = (None,) * (len(dtypes) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                got = per_item(_as_bytes(payload))
+                rows.extend([(mid, *void)] if got is None else [(mid, *r) for r in got])
+            cols = list(zip(*rows)) if rows else [()] * len(dtypes)
+            yield pd.DataFrame(
+                {n: pd.Series(list(c), dtype=d) for (n, d), c in zip(dtypes.items(), cols)}
+            )
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _rewrite_payloads(df: DataFrame, rewrite) -> DataFrame:
+    """The one operator shape of the payload rewriters: ``rewrite(bytes |
+    None) -> bytes | None`` decodes, transforms and re-encodes one payload
+    inside Arrow-batched ``mapInPandas``. MEDIA_SCHEMA rows come out with
+    the new payload and its size, ``mime_type`` and ``meta_json`` passed
+    through; None (undecodable) leaves payload and ``n_bytes`` NULL."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [rewrite(_as_bytes(p)) for p in pdf["payload"]]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "payload": out,
+                    "mime_type": pdf["mime_type"],
+                    "n_bytes": pd.array(
+                        [None if b is None else len(b) for b in out], dtype="Int64"
+                    ),
+                    "meta_json": pdf["meta_json"],
+                }
+            )
+
+    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
+
+
+def _empty(a) -> bool:
+    """A failed (None) or zero-size decode: NULL stats in every extractor."""
+    return a is None or a.size == 0
 
 
 def parse_image_header(b: bytes | None) -> tuple[str, int, int] | None:
@@ -199,7 +258,7 @@ def extract_media_dimensions(df: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             parsed = [
-                parse_image_header(None if p is None else bytes(p))
+                parse_image_header(_as_bytes(p))
                 for p in pdf["payload"]
             ]
             yield pd.DataFrame(
@@ -214,18 +273,6 @@ def extract_media_dimensions(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(run, schema=DIMENSIONS_SCHEMA)
-
-
-def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Wrap any table into the media schema (test harness: document text
-    bytes stand in for image payloads)."""
-    return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(text_col).cast("binary").alias("payload"),
-        F.lit("application/octet-stream").alias("mime_type"),
-        F.octet_length(F.col(text_col).cast("binary")).cast("long").alias("n_bytes"),
-        F.to_json(F.struct(F.lit("stub").alias("codec"))).alias("meta_json"),
-    )
 
 
 def parse_wav_header(b: bytes | None) -> tuple[int, int, int, float] | None:
@@ -326,7 +373,7 @@ def extract_audio_meta(df: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             parsed = [
-                parse_wav_header(None if p is None else bytes(p)) for p in pdf["payload"]
+                parse_wav_header(_as_bytes(p)) for p in pdf["payload"]
             ]
             yield pd.DataFrame(
                 {
@@ -406,71 +453,6 @@ def sample_frames(df: DataFrame, fps: float = 1.0, max_frames: int = 32) -> Data
             )
 
     return df.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
-
-
-def fit_within(w: int, h: int, max_w: int, max_h: int) -> tuple[int, int]:
-    """Aspect-preserving resize geometry (the pure-math half of a resize
-    operator; the resampler slots in behind the same numbers): largest
-    (width, height) <= (max_w, max_h) keeping w:h, floor-rounded, min 1px."""
-    if w <= 0 or h <= 0:
-        return (1, 1)
-    scale = min(max_w / w, max_h / h, 1.0)
-    return (max(int(w * scale), 1), max(int(h * scale), 1))
-
-
-def extract_features(df: DataFrame, decode_stub: bool = True, batch_hint: int | None = None) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow record batches).
-
-    With ``decode_stub`` the "decoder" derives FEATURE_DIM floats from the
-    payload bytes deterministically — exercising the full distributed path
-    (schema, batch shape, null payloads) without codec libraries.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                if payload is None:
-                    feats.append(None)
-                    continue
-                b = bytes(payload)
-                if not decode_stub:
-                    # real header decode: container features (dims, aspect,
-                    # compression density). Pixel-level features would slot
-                    # in here with a codec library; unrecognized payloads
-                    # yield NULL, not a crash.
-                    parsed = parse_image_header(b)
-                    if parsed is None:
-                        feats.append(None)
-                        continue
-                    fmt, w, h = parsed
-                    px = max(w * h, 1)
-                    feats.append(
-                        [
-                            float(w),
-                            float(h),
-                            round(w / max(h, 1), 6),
-                            round(len(b) / px, 6),  # bytes per pixel
-                            float({"png": 0, "jpeg": 1, "gif": 2}[fmt]),
-                        ]
-                    )
-                    continue
-                # deterministic fake: byte-sum histogram over FEATURE_DIM buckets
-                acc = [0.0] * FEATURE_DIM
-                for i, byte in enumerate(b):
-                    acc[i % FEATURE_DIM] += byte / 255.0
-                n = max(len(b), 1)
-                feats.append([round(v / n, 6) for v in acc])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime_type": pdf["mime_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "feature": feats,
-                }
-            )
-
-    return df.mapInPandas(run, schema=_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -803,55 +785,33 @@ PIXEL_STATS_SCHEMA = StructType(
 
 
 def extract_pixel_stats(df: DataFrame, decoder=None) -> DataFrame:
-    """Distributed pixel-level statistics over PNG payloads: per-image
-    channel sums and means from the REAL decode (``decode_png_rgb``), via
-    Arrow-batched ``mapInPandas`` over MEDIA_SCHEMA frames. Undecodable
-    payloads yield NULL stats. The per-image reduce happens inside the
-    executor pass — only the (id, stats) row leaves, never pixels, so
-    output is O(images) regardless of resolution. ``decoder`` is the
-    production-codec seam: a callable ``bytes|None -> decoded|None`` with
-    the same contract as the pure default — a native library (e.g. a
-    libjpeg/libpng binding) slots in behind the identical operator shape,
-    schema, and null discipline (throughput gap quantified in SCALE.md
-    §8i)."""
-    import numpy as np
-
+    """Distributed pixel-level statistics over still-image payloads:
+    per-image RGB channel sums (exact int64) and means from the REAL
+    decode, PNG (``decode_png_rgb``) by default. Any RGB decoder slots in
+    behind ``decoder=``: ``decode_jpeg_rgb`` (color JPEG at every
+    supported sampling, baseline or progressive), ``decode_gif_rgb``,
+    ``decode_bmp_rgb``, ``decode_tiff_rgb`` or a native codec, all with
+    the same output schema, so the formats union cleanly. Undecodable
+    or zero-size payloads yield NULL stats."""
     decoder = decoder or decode_png_rgb
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decoder(None if payload is None else bytes(payload))
-                if px is None:
-                    rows.append((mid, None, None, None, None, None, None, None, None, None))
-                    continue
-                h, w, _ = px.shape
-                s = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                n = w * h
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        n,
-                        int(s[0]),
-                        int(s[1]),
-                        int(s[2]),
-                        s[0] / n,
-                        s[1] / n,
-                        s[2] / n,
-                    )
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "width", "height", "n_px", "sum_r", "sum_g",
-                 "sum_b", "mean_r", "mean_g", "mean_b"],
-                ["int64", "Int32", "Int32", "Int64", "Int64", "Int64",
-                 "Int64", "Float64", "Float64", "Float64"],
-            )
+    def per_item(b):
+        stats = _rgb_stats(decoder(b))
+        return None if stats is None else [stats]
 
-    return df.mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return _map_payloads(df, PIXEL_STATS_SCHEMA, per_item)
+
+
+def _rgb_stats(px):
+    """(width, height, n_px, sum_r, sum_g, sum_b, mean_r, mean_g, mean_b)
+    of one (h, w, 3) uint8 frame, sums exact in int64; None for a failed
+    or zero-size decode."""
+    if _empty(px):
+        return None
+    h, w, _ = px.shape
+    n = w * h
+    s = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+    return (w, h, n, int(s[0]), int(s[1]), int(s[2]), s[0] / n, s[1] / n, s[2] / n)
 
 
 # ---------------------------------------------------------------------------
@@ -1917,54 +1877,25 @@ AUDIO_STATS_SCHEMA = StructType(
 
 def extract_audio_stats(df: DataFrame, decoder=None) -> DataFrame:
     """Distributed waveform statistics over PCM WAV payloads via the REAL
-    sample decode (``decode_wav_pcm``) inside Arrow-batched mapInPandas:
-    per-payload energy (sum of squares), total magnitude, peak, and RMS.
-    Undecodable payloads yield NULL stats. Like ``extract_pixel_stats``,
-    the reduce happens in the executor pass — O(files) rows out, never
-    samples. Stats accumulate in int64 (a peak of -32768 would overflow
-    abs() in int16). ``decoder`` is the
-    production-codec seam: a callable ``bytes|None -> decoded|None`` with
-    the same contract as the pure default — a native library (e.g. a
-    libsndfile or ffmpeg binding) slots in behind the identical operator shape,
-    schema, and null discipline (throughput gap quantified in SCALE.md
-    §8i)."""
-    import numpy as np
-
+    sample decode (``decode_wav_pcm`` or any ``decoder=``): per-payload
+    energy (sum of squares), total magnitude, peak, and RMS. Undecodable
+    or sample-less payloads yield NULL stats. Stats accumulate in int64
+    (a peak of -32768 would overflow abs() in int16)."""
     decoder = decoder or decode_wav_pcm
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decoder(None if payload is None else bytes(payload))
-                if dec is None or dec[2].size == 0:
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                ch, rate, s = dec
-                v = s.astype(np.int64)
-                sum_sq = int((v * v).sum())
-                n = int(v.size)
-                rows.append(
-                    (
-                        mid,
-                        ch,
-                        rate,
-                        n,
-                        sum_sq,
-                        int(np.abs(v).sum()),
-                        int(np.abs(v).max()),
-                        (sum_sq / n) ** 0.5,
-                    )
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "channels", "sample_rate", "n_samples",
-                 "sum_sq", "sum_abs", "peak", "rms"],
-                ["int64", "Int32", "Int32", "Int64", "Int64", "Int64",
-                 "Int32", "Float64"],
-            )
+    def per_item(b):
+        dec = decoder(b)
+        if dec is None or _empty(dec[2]):
+            return None
+        ch, rate, s = dec
+        v = s.astype(np.int64)
+        sum_sq = int((v * v).sum())
+        n = int(v.size)
+        return [
+            (ch, rate, n, sum_sq, int(np.abs(v).sum()), int(np.abs(v).max()), (sum_sq / n) ** 0.5)
+        ]
 
-    return df.mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
+    return _map_payloads(df, AUDIO_STATS_SCHEMA, per_item)
 
 
 AUDIO_CHANNEL_STATS_SCHEMA = StructType(
@@ -1996,56 +1927,42 @@ def extract_audio_channel_stats(df: DataFrame, decoder=None) -> DataFrame:
     rate, frames per channel, per-channel sums, and sum/|sum|/peak/mean
     over the mixed signal. Mono passes through (mix = the signal);
     payloads outside the 1-2 channel profile or undecodable yield NULL
-    stats. O(files) rows out; samples never leave the executor."""
-    import numpy as np
-
+    stats."""
     decoder = decoder or decode_wav_pcm
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decoder(None if payload is None else bytes(payload))
-                if (
-                    dec is None
-                    or dec[2].size == 0
-                    or dec[0] not in (1, 2)
-                    # an interleaved buffer not divisible by the channel
-                    # count (possible only via the decoder= seam —
-                    # decode_wav_pcm enforces block alignment) cannot be
-                    # de-interleaved: void the item, don't crash the task
-                    or dec[2].size % dec[0] != 0
-                ):
-                    rows.append((int(mid),) + (None,) * 9)
-                    continue
-                ch, rate, s = dec
-                v = s.astype(np.int64)
-                if ch == 2:
-                    left, right = v[0::2], v[1::2]
-                    mix = (left + right) // 2  # numpy // floors, as SQL FLOOR
-                    sum_r = int(right.sum())
-                else:
-                    left = mix = v
-                    sum_r = None
-                n = int(mix.size)
-                rows.append(
-                    (
-                        int(mid), ch, rate, n,
-                        int(left.sum()), sum_r,
-                        int(mix.sum()), int(np.abs(mix).sum()),
-                        int(np.abs(mix).max()), mix.sum() / n,
-                    )
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "channels", "sample_rate", "n_frames",
-                 "sum_l", "sum_r", "sum_mix", "sum_abs_mix", "peak_mix",
-                 "mean_mix"],
-                ["int64", "Int32", "Int32", "Int64", "Int64", "Int64",
-                 "Int64", "Int64", "Int32", "Float64"],
+    def per_item(b):
+        dec = decoder(b)
+        if (
+            dec is None
+            or _empty(dec[2])
+            or dec[0] not in (1, 2)
+            # an interleaved buffer not divisible by the channel
+            # count (possible only via the decoder= seam —
+            # decode_wav_pcm enforces block alignment) cannot be
+            # de-interleaved: void the item, don't crash the task
+            or dec[2].size % dec[0] != 0
+        ):
+            return None
+        ch, rate, s = dec
+        v = s.astype(np.int64)
+        if ch == 2:
+            left, right = v[0::2], v[1::2]
+            mix = (left + right) // 2  # numpy // floors, as SQL FLOOR
+            sum_r = int(right.sum())
+        else:
+            left = mix = v
+            sum_r = None
+        n = int(mix.size)
+        return [
+            (
+                ch, rate, n,
+                int(left.sum()), sum_r,
+                int(mix.sum()), int(np.abs(mix).sum()),
+                int(np.abs(mix).max()), mix.sum() / n,
             )
+        ]
 
-    return df.mapInPandas(run, schema=AUDIO_CHANNEL_STATS_SCHEMA)
+    return _map_payloads(df, AUDIO_CHANNEL_STATS_SCHEMA, per_item)
 
 
 def box_downsample_pcm(samples, channels: int, factor: int):
@@ -2073,43 +1990,23 @@ def resample_wav_payloads(df: DataFrame, factor: int = 2) -> DataFrame:
     """REAL sample-rate downsample over PCM WAV payloads, distributed:
     decode (``decode_wav_pcm``) → frame-wise box-downsample by ``factor``
     (floor-integer window means, ragged tail handled) → re-encode at
-    ``rate // factor``, inside Arrow-batched mapInPandas. Returns
-    MEDIA_SCHEMA rows with the resampled payload; undecodable payloads
-    pass through with payload NULL — the same shape and null discipline
-    as :func:`resize_image_payloads`, completing the resample story for
-    the audio profile (a training pipeline normalizes heterogeneous
-    sample rates before feature extraction). ``factor`` is validated
-    driver-side so a bad parameter fails fast, not as an executor
-    traceback mid-job."""
+    ``rate // factor``. Returns MEDIA_SCHEMA rows with the resampled
+    payload; undecodable payloads pass through with payload NULL — the
+    same shape and null discipline as :func:`resize_image_payloads`
+    (a training pipeline normalizes heterogeneous sample rates before
+    feature extraction). ``factor`` is validated driver-side so a bad
+    parameter fails fast, not as an executor traceback mid-job."""
     if not isinstance(factor, int) or factor < 1:
         raise ValueError("factor must be an int >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, sizes = [], []
-            for payload in pdf["payload"]:
-                dec = decode_wav_pcm(None if payload is None else bytes(payload))
-                if dec is None or dec[2].size == 0:
-                    payloads.append(None)
-                    sizes.append(None)
-                    continue
-                ch, rate, s = dec
-                out = encode_wav_pcm(
-                    box_downsample_pcm(s, ch, factor), max(1, rate // factor), ch
-                )
-                payloads.append(out)
-                sizes.append(len(out))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "mime_type": pdf["mime_type"],
-                    "n_bytes": pd.array(sizes, dtype="Int64"),
-                    "meta_json": pdf["meta_json"],
-                }
-            )
+    def rewrite(b):
+        dec = decode_wav_pcm(b)
+        if dec is None or _empty(dec[2]):
+            return None
+        ch, rate, s = dec
+        return encode_wav_pcm(box_downsample_pcm(s, ch, factor), max(1, rate // factor), ch)
 
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _rewrite_payloads(df, rewrite)
 
 
 def box_downsample_rgb(px, factor: int):
@@ -2134,40 +2031,19 @@ def box_downsample_rgb(px, factor: int):
 def resize_image_payloads(df: DataFrame, factor: int = 2) -> DataFrame:
     """REAL pixel resize over PNG payloads, distributed: decode
     (``decode_png_rgb``) → box-downsample by ``factor`` (floor-integer
-    block means, ragged edges handled) → re-encode (``encode_png_rgb``),
-    inside Arrow-batched mapInPandas. Returns MEDIA_SCHEMA rows with the
-    resized payload; undecodable payloads pass through with payload NULL
-    (the same null discipline as the stat extractors). Completes the
-    decode / feature-extract / RESIZE / frame-sample multimodal quartet
-    with real pixels for the PNG profile. ``factor`` is validated
-    driver-side so a bad parameter fails fast, not as an executor
-    traceback mid-job."""
+    block means, ragged edges handled) → re-encode (``encode_png_rgb``).
+    Returns MEDIA_SCHEMA rows with the resized payload; undecodable
+    payloads pass through with payload NULL (the same null discipline
+    as the stat extractors). ``factor`` is validated driver-side so a
+    bad parameter fails fast, not as an executor traceback mid-job."""
     if not isinstance(factor, int) or factor < 1:
         raise ValueError("factor must be an int >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, sizes = [], []
-            for payload in pdf["payload"]:
-                px = decode_png_rgb(None if payload is None else bytes(payload))
-                if px is None:
-                    payloads.append(None)
-                    sizes.append(None)
-                    continue
-                out = encode_png_rgb(box_downsample_rgb(px, factor))
-                payloads.append(out)
-                sizes.append(len(out))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "mime_type": pdf["mime_type"],
-                    "n_bytes": pd.array(sizes, dtype="Int64"),
-                    "meta_json": pdf["meta_json"],
-                }
-            )
+    def rewrite(b):
+        px = decode_png_rgb(b)
+        return None if _empty(px) else encode_png_rgb(box_downsample_rgb(px, factor))
 
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _rewrite_payloads(df, rewrite)
 
 
 # ---------------------------------------------------------------------------
@@ -3711,89 +3587,22 @@ JPEG_STATS_SCHEMA = StructType(
 
 def extract_jpeg_stats(df: DataFrame, decoder=None) -> DataFrame:
     """Distributed pixel statistics over grayscale JPEG payloads
-    (baseline or progressive)
-    via the REAL entropy-level decode (``decode_jpeg_gray``) inside
-    Arrow-batched mapInPandas: per-image luminance sum/min/max/mean.
-    Undecodable or out-of-profile payloads yield NULL stats. Same
-    O(images)-rows-out discipline as ``extract_pixel_stats``. ``decoder`` is the
-    production-codec seam: a callable ``bytes|None -> decoded|None`` with
-    the same contract as the pure default — a native library (e.g. a
-    libjpeg/libpng binding) slots in behind the identical operator shape,
-    schema, and null discipline (throughput gap quantified in SCALE.md
-    §8i)."""
-    import numpy as np
-
+    (baseline or progressive) via the REAL entropy-level decode
+    (``decode_jpeg_gray`` or any ``decoder=``): per-image luminance
+    sum/min/max/mean. Undecodable, out-of-profile or zero-size payloads
+    yield NULL stats."""
     decoder = decoder or decode_jpeg_gray
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decoder(None if payload is None else bytes(payload))
-                if px is None or px.size == 0:
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                h, w = px.shape
-                total = int(px.sum(dtype=np.int64))
-                n = w * h
-                rows.append(
-                    (mid, w, h, n, total, int(px.min()), int(px.max()), total / n)
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "width", "height", "n_px", "sum_v", "min_v",
-                 "max_v", "mean_v"],
-                ["int64", "Int32", "Int32", "Int64", "Int64", "Int32",
-                 "Int32", "Float64"],
-            )
+    def per_item(b):
+        px = decoder(b)
+        if _empty(px):
+            return None
+        h, w = px.shape
+        total = int(px.sum(dtype=np.int64))
+        n = w * h
+        return [(w, h, n, total, int(px.min()), int(px.max()), total / n)]
 
-    return df.mapInPandas(run, schema=JPEG_STATS_SCHEMA)
-
-
-def extract_jpeg_color_stats(df: DataFrame, decoder=None) -> DataFrame:
-    """Distributed per-channel pixel statistics over COLOR JPEG payloads
-    — baseline at any supported sampling (4:4:4 or Y-subsampled:
-    4:2:0/4:2:2/4:4:0/4:1:1/...) AND progressive — via the REAL entropy decode +
-    CCIR 601 inverse transform (``decode_jpeg_rgb``) inside Arrow-batched
-    mapInPandas: per-image RGB sums and means, the color twin of
-    ``extract_pixel_stats`` (same output schema, so PNG and JPEG color
-    stats union cleanly). Undecodable or out-of-profile payloads
-    (grayscale, progressive, exotic sampling mixes) yield NULL stats —
-    4:2:0 AND 4:2:2 DECODE
-    (MCU-interleaved paths, replication chroma upsample); only the
-    per-image stat row leaves an executor, never pixels. ``decoder`` is the
-    production-codec seam: a callable ``bytes|None -> decoded|None`` with
-    the same contract as the pure default — a native library (e.g. a
-    libjpeg/libpng binding) slots in behind the identical operator shape,
-    schema, and null discipline (throughput gap quantified in SCALE.md
-    §8i)."""
-    import numpy as np
-
-    decoder = decoder or decode_jpeg_rgb
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decoder(None if payload is None else bytes(payload))
-                if px is None or px.size == 0:
-                    rows.append((mid, None, None, None, None, None, None, None, None, None))
-                    continue
-                h, w, _ = px.shape
-                s = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                n = w * h
-                rows.append(
-                    (mid, w, h, n, int(s[0]), int(s[1]), int(s[2]), s[0] / n, s[1] / n, s[2] / n)
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "width", "height", "n_px", "sum_r", "sum_g",
-                 "sum_b", "mean_r", "mean_g", "mean_b"],
-                ["int64", "Int32", "Int32", "Int64", "Int64", "Int64",
-                 "Int64", "Float64", "Float64", "Float64"],
-            )
-
-    return df.mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return _map_payloads(df, JPEG_STATS_SCHEMA, per_item)
 
 
 # ---------------------------------------------------------------------------
@@ -3997,56 +3806,59 @@ VIDEO_STATS_SCHEMA = StructType(
 )
 
 
+def _mjpeg_frames(b: bytes | None):
+    """The frame walk of every video extractor: the sample table
+    (``parse_mp4_samples``) slices each frame out of mdat and
+    ``decode_jpeg_gray`` reconstructs its (h, w) uint8 luminance,
+    yielded one frame at a time in sample order (frame t needs only
+    t-1, so a video never sits decoded in memory). Yields None, and
+    stops, where the video is void: no sample table or no samples, or
+    a frame that fails to decode, decodes empty, or changes shape — the
+    callers NULL the row, never report a partial answer."""
+    samples = parse_mp4_samples(b)
+    if not samples:
+        yield None
+        return
+    shape = None
+    for off, size in samples:
+        px = decode_jpeg_gray(b[off : off + size])
+        if _empty(px) or (shape is not None and px.shape != shape):
+            yield None
+            return
+        shape = px.shape
+        yield px
+
+
+def _frame_cut(prev, cur, mean_diff_gt: int) -> tuple[int, bool]:
+    """The cut rule shared by the scene and keyframe extractors: the total
+    absolute luminance difference of adjacent frames (int64, exact) and
+    whether it makes frame ``cur`` a cut, diff > mean_diff_gt * n_px (an
+    integer compare, no float thresholds)."""
+    d = int(np.abs(np.subtract(cur, prev, dtype=np.int64)).sum())
+    return d, d > mean_diff_gt * cur.size
+
+
 def extract_video_frame_stats(df: DataFrame) -> DataFrame:
-    """Distributed FRAME-PIXEL statistics over MJPEG mp4 payloads: the
-    sample-table walk (``parse_mp4_samples``) slices every frame out of
-    mdat and the baseline JPEG decode (``decode_jpeg_gray``) reconstructs
-    its pixels, inside Arrow-batched mapInPandas. Per video: decoded frame
-    count, frame dimensions, total pixels, and luminance sum/min/max/mean
-    across ALL frames. Videos outside the profile (or with any undecodable
-    frame) yield NULL stats — partial decodes are not reported as totals.
-    O(videos) rows out; pixels never leave the executor."""
-    import numpy as np
+    """Distributed FRAME-PIXEL statistics over MJPEG mp4 payloads through
+    the shared frame walk (:func:`_mjpeg_frames`). Per video: decoded
+    frame count, frame dimensions, total pixels, and luminance
+    sum/min/max/mean across ALL frames. Videos outside the profile (or
+    with any undecodable frame) yield NULL stats."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples = parse_mp4_samples(None if payload is None else bytes(payload))
-                if not samples:
-                    rows.append((mid, None, None, None, None, None, None, None, None))
-                    continue
-                raw = bytes(payload)
-                total = 0
-                n_px = 0
-                vmin, vmax = 256, -1
-                w = h = None
-                ok = True
-                for off, size in samples:
-                    px = decode_jpeg_gray(raw[off : off + size])
-                    if px is None or (w is not None and px.shape != (h, w)):
-                        ok = False
-                        break
-                    h, w = px.shape
-                    total += int(px.sum(dtype=np.int64))
-                    n_px += px.size
-                    vmin = min(vmin, int(px.min()))
-                    vmax = max(vmax, int(px.max()))
-                if not ok or n_px == 0:
-                    rows.append((mid, None, None, None, None, None, None, None, None))
-                    continue
-                rows.append(
-                    (mid, len(samples), w, h, n_px, total, vmin, vmax, total / n_px)
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "n_frames", "width", "height", "n_px",
-                 "sum_v", "min_v", "max_v", "mean_v"],
-                ["int64", "Int32", "Int32", "Int32", "Int64", "Int64",
-                 "Int32", "Int32", "Float64"],
-            )
+    def per_item(b):
+        n = total = 0
+        lo, hi = 255, 0
+        for px in _mjpeg_frames(b):
+            if px is None:
+                return None
+            n += 1
+            total += int(px.sum(dtype=np.int64))
+            lo, hi = min(lo, int(px.min())), max(hi, int(px.max()))
+        h, w = px.shape
+        n_px = n * w * h
+        return [(n, w, h, n_px, total, lo, hi, total / n_px)]
 
-    return df.mapInPandas(run, schema=VIDEO_STATS_SCHEMA)
+    return _map_payloads(df, VIDEO_STATS_SCHEMA, per_item)
 
 
 ANIMATION_STATS_SCHEMA = StructType(
@@ -4071,43 +3883,19 @@ def extract_gif_animation_stats(df: DataFrame) -> DataFrame:
     output row per composited frame (what a viewer shows after each
     image is applied — partial-canvas placement, GCE transparency, and
     disposal 0/1/2/3 all resolved by :func:`decode_gif_animation`), with
-    exact int64 RGB channel sums. An undecodable or out-of-profile
-    payload yields ONE row with NULL frame_idx and NULL stats — items
-    are voided whole, never reported partially (the video extractors'
-    discipline). O(sum of frame counts) rows out; pixels never leave
-    the executor."""
-    import numpy as np
+    the RGB sums and means of :func:`extract_pixel_stats`. An
+    undecodable or out-of-profile payload yields ONE row with NULL
+    frame_idx and NULL stats — items are voided whole, never reported
+    partially (the video extractors' discipline)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = decode_gif_animation(
-                    None if payload is None else bytes(payload)
-                )
-                if frames is None:
-                    rows.append((int(mid),) + (None,) * 10)
-                    continue
-                for k, fr in enumerate(frames):
-                    h, w, _ = fr.shape
-                    n = w * h
-                    sums = fr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    rows.append(
-                        (
-                            int(mid), k, w, h, n,
-                            int(sums[0]), int(sums[1]), int(sums[2]),
-                            sums[0] / n, sums[1] / n, sums[2] / n,
-                        )
-                    )
-            yield _typed_frame(
-                rows,
-                ["media_id", "frame_idx", "width", "height", "n_px",
-                 "sum_r", "sum_g", "sum_b", "mean_r", "mean_g", "mean_b"],
-                ["int64", "Int32", "Int32", "Int32", "Int64",
-                 "Int64", "Int64", "Int64", "Float64", "Float64", "Float64"],
-            )
+    def per_item(b):
+        frames = decode_gif_animation(b)
+        stats = None if frames is None else [_rgb_stats(fr) for fr in frames]
+        if stats is None or None in stats:
+            return None
+        return [(k, *s) for k, s in enumerate(stats)]
 
-    return df.mapInPandas(run, schema=ANIMATION_STATS_SCHEMA)
+    return _map_payloads(df, ANIMATION_STATS_SCHEMA, per_item)
 
 
 SCENE_SCHEMA = StructType(
@@ -4127,60 +3915,31 @@ def extract_video_scene_changes(df: DataFrame, mean_diff_gt: int = 8) -> DataFra
     shot-boundary pass a video training corpus runs before frame
     sampling, so sampled frames cover scenes instead of duplicating one:
     every adjacent frame pair reduces to its total absolute luminance
-    difference (int64, exact), and frame t is a CUT when
-    diff_t > mean_diff_gt * n_px (an integer compare, no float
-    thresholds). Per video: decoded frame count, cut count, first cut
-    index (NULL when the video is one scene), and the sum/max of the
-    per-transition diffs. Sequential frame decode per video inside
-    Arrow-batched mapInPandas (frame t needs t-1 — the recurrence stays
-    inside one item, so videos still parallelize freely); any
-    undecodable or shape-shifting frame voids the row (NULL stats, never
-    a partial answer). O(videos) rows out; pixels never leave the
-    executor."""
-    import numpy as np
+    difference, and frame t is a CUT by :func:`_frame_cut`. Per video:
+    decoded frame count, cut count, first cut index (NULL when the video
+    is one scene), and the sum/max of the per-transition diffs. The
+    recurrence stays inside one item (:func:`_mjpeg_frames`), so videos
+    still parallelize freely; any undecodable or shape-shifting frame
+    voids the row."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples = parse_mp4_samples(None if payload is None else bytes(payload))
-                if not samples:
-                    rows.append((int(mid), None, None, None, None, None))
-                    continue
-                raw = bytes(payload)
-                prev = None
-                n_cuts, first_cut = 0, None
-                sum_diff = max_diff = 0
-                ok = True
-                for f, (off, size) in enumerate(samples):
-                    px = decode_jpeg_gray(raw[off : off + size])
-                    if px is None or (prev is not None and px.shape != prev.shape):
-                        ok = False
-                        break
-                    cur = px.astype(np.int64)
-                    if prev is not None:
-                        d = int(np.abs(cur - prev).sum())
-                        sum_diff += d
-                        max_diff = max(max_diff, d)
-                        if d > mean_diff_gt * cur.size:
-                            n_cuts += 1
-                            if first_cut is None:
-                                first_cut = f
-                    prev = cur
-                if not ok:
-                    rows.append((int(mid), None, None, None, None, None))
-                    continue
-                rows.append(
-                    (int(mid), len(samples), n_cuts, first_cut, sum_diff, max_diff)
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "n_frames", "n_cuts", "first_cut", "sum_diff",
-                 "max_diff"],
-                ["int64", "Int32", "Int32", "Int32", "Int64", "Int64"],
-            )
+    def per_item(b):
+        n_cuts = sum_diff = max_diff = 0
+        first_cut = prev = None
+        for f, px in enumerate(_mjpeg_frames(b)):
+            if px is None:
+                return None
+            if prev is not None:
+                d, cut = _frame_cut(prev, px, mean_diff_gt)
+                sum_diff += d
+                max_diff = max(max_diff, d)
+                if cut:
+                    n_cuts += 1
+                    if first_cut is None:
+                        first_cut = f
+            prev = px
+        return [(f + 1, n_cuts, first_cut, sum_diff, max_diff)]
 
-    return df.mapInPandas(run, schema=SCENE_SCHEMA)
+    return _map_payloads(df, SCENE_SCHEMA, per_item)
 
 
 # ---------------------------------------------------------------------------
@@ -4246,44 +4005,17 @@ DHASH_SCHEMA = StructType(
 
 def extract_image_dhash(df: DataFrame, decoder=None) -> DataFrame:
     """Distributed perceptual hashing: (media_id, width, height, dhash,
-    b0..b3) per payload via the REAL pixel decode + :func:`dhash64`
-    inside Arrow-batched mapInPandas. Undecodable or sub-grid payloads
-    yield NULL hash columns. O(images) rows out — pixels never leave the
-    executor pass. ``decoder`` is the production-codec seam (same
-    contract as :func:`extract_pixel_stats`)."""
-
+    b0..b3) per payload via the REAL pixel decode (PNG by default, any
+    RGB ``decoder=``) + :func:`dhash64`. Undecodable or sub-grid
+    payloads yield NULL hash columns."""
     decoder = decoder or decode_png_rgb
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decoder(None if payload is None else bytes(payload))
-                got = None if dec is None else dhash64(dec)
-                if got is None:
-                    rows.append((int(mid), None, None, None, None, None, None, None))
-                else:
-                    dh, b0, b1, b2, b3 = got
-                    rows.append(
-                        (
-                            int(mid),
-                            int(dec.shape[1]),
-                            int(dec.shape[0]),
-                            dh,
-                            b0,
-                            b1,
-                            b2,
-                            b3,
-                        )
-                    )
-            yield _typed_frame(
-                rows,
-                [f.name for f in DHASH_SCHEMA.fields],
-                ["int64", "Int32", "Int32", "Int64", "Int32", "Int32",
-                 "Int32", "Int32"],
-            )
+    def per_item(b):
+        dec = decoder(b)
+        got = None if dec is None else dhash64(dec)
+        return None if got is None else [(int(dec.shape[1]), int(dec.shape[0]), *got)]
 
-    return df.mapInPandas(run, schema=DHASH_SCHEMA)
+    return _map_payloads(df, DHASH_SCHEMA, per_item)
 
 
 def dhash_neardup_pairs(
@@ -4392,37 +4124,18 @@ AUDIO_FP_SCHEMA = StructType(
 def extract_audio_fingerprint(df: DataFrame, decoder=None) -> DataFrame:
     """Distributed audio fingerprinting: (media_id, channels, n_samples,
     fp, b0..b3) per payload via the REAL sample decode
-    (``decode_wav_pcm`` or any ``decoder=`` seam injection) +
-    :func:`audio_fingerprint64` inside Arrow-batched mapInPandas.
-    Undecodable or sub-window payloads yield NULL fingerprint columns;
-    O(files) rows out. Feed the result to :func:`dhash_neardup_pairs`
-    (hash_col="fp") for the banded near-dup join."""
-
+    (``decode_wav_pcm`` or any ``decoder=``) + :func:`audio_fingerprint64`.
+    Undecodable or sub-window payloads yield NULL fingerprint columns.
+    Feed the result to :func:`dhash_neardup_pairs` (hash_col="fp") for
+    the banded near-dup join."""
     decoder = decoder or decode_wav_pcm
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decoder(None if payload is None else bytes(payload))
-                got = None if dec is None else audio_fingerprint64(dec[2])
-                if got is None:
-                    rows.append(
-                        (int(mid), None, None, None, None, None, None, None)
-                    )
-                else:
-                    fp, b0, b1, b2, b3 = got
-                    rows.append(
-                        (int(mid), int(dec[0]), len(dec[2]), fp, b0, b1, b2, b3)
-                    )
-            yield _typed_frame(
-                rows,
-                [f.name for f in AUDIO_FP_SCHEMA.fields],
-                ["int64", "Int32", "Int64", "Int64", "Int32", "Int32",
-                 "Int32", "Int32"],
-            )
+    def per_item(b):
+        dec = decoder(b)
+        got = None if dec is None else audio_fingerprint64(dec[2])
+        return None if got is None else [(int(dec[0]), len(dec[2]), *got)]
 
-    return df.mapInPandas(run, schema=AUDIO_FP_SCHEMA)
+    return _map_payloads(df, AUDIO_FP_SCHEMA, per_item)
 
 
 def media_neardup_route(
@@ -4879,66 +4592,30 @@ KEYFRAME_SCHEMA = StructType(
 def extract_keyframe_stats(df: DataFrame, mean_diff_gt: int = 8) -> DataFrame:
     """Scene-aware KEYFRAME extraction — the sampling pass that follows
     shot-boundary detection: frame 0 plus the first frame of every new
-    scene (a cut by the same integer rule as
-    :func:`extract_video_scene_changes`: adjacent-frame |diff| >
-    mean_diff_gt * n_px) become the video's keyframes, and the
-    luminance stats aggregate over KEYFRAMES ONLY — one representative
-    frame per scene instead of fps-uniform frames that oversample long
-    static shots. Per video: frame count, keyframe count, the keyframe
-    index list, and sum/min/max over keyframe pixels. Same voiding
-    discipline as the other video extractors (any undecodable frame ->
-    NULL row). O(videos) rows out."""
-    import numpy as np
+    scene (a cut by the same rule as
+    :func:`extract_video_scene_changes`, :func:`_frame_cut`) become the
+    video's keyframes, and the luminance stats aggregate over KEYFRAMES
+    ONLY — one representative frame per scene instead of fps-uniform
+    frames that oversample long static shots. Per video: frame count,
+    keyframe count, the keyframe index list, and sum/min/max over
+    keyframe pixels. Same voiding discipline as the other video
+    extractors (any undecodable frame -> NULL row)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples = parse_mp4_samples(None if payload is None else bytes(payload))
-                if not samples:
-                    rows.append((int(mid), None, None, None, None, None, None))
-                    continue
-                raw = bytes(payload)
-                prev = None
-                kf_idx: list[int] = []
-                total = 0
-                vmin, vmax = 256, -1
-                ok = True
-                for f, (off, size) in enumerate(samples):
-                    px = decode_jpeg_gray(raw[off : off + size])
-                    if px is None or (prev is not None and px.shape != prev.shape):
-                        ok = False
-                        break
-                    cur = px.astype(np.int64)
-                    is_kf = f == 0 or (
-                        int(np.abs(cur - prev).sum()) > mean_diff_gt * cur.size
-                    )
-                    if is_kf:
-                        kf_idx.append(f)
-                        total += int(cur.sum())
-                        vmin = min(vmin, int(px.min()))
-                        vmax = max(vmax, int(px.max()))
-                    prev = cur
-                if not ok:
-                    rows.append((int(mid), None, None, None, None, None, None))
-                    continue
-                rows.append(
-                    (int(mid), len(samples), len(kf_idx), kf_idx, total, vmin, vmax)
-                )
-            names = [f.name for f in KEYFRAME_SCHEMA.fields]
-            cols = list(zip(*rows)) if rows else [[] for _ in names]
-            frame = {
-                n: pd.array(list(c), dtype=d)
-                for n, c, d in zip(
-                    names, cols,
-                    ["int64", "Int32", "Int32", None, "Int64", "Int32", "Int32"],
-                )
-                if d is not None
-            }
-            frame["keyframe_idx"] = pd.Series(cols[3], dtype="object")
-            yield pd.DataFrame(frame)[names]
+    def per_item(b):
+        kf_idx: list[int] = []
+        total, lo, hi = 0, 255, 0
+        prev = None
+        for f, px in enumerate(_mjpeg_frames(b)):
+            if px is None:
+                return None
+            if prev is None or _frame_cut(prev, px, mean_diff_gt)[1]:
+                kf_idx.append(f)
+                total += int(px.sum(dtype=np.int64))
+                lo, hi = min(lo, int(px.min())), max(hi, int(px.max()))
+            prev = px
+        return [(f + 1, len(kf_idx), kf_idx, total, lo, hi)]
 
-    return df.mapInPandas(run, schema=KEYFRAME_SCHEMA)
+    return _map_payloads(df, KEYFRAME_SCHEMA, per_item)
 
 
 # ---------------------------------------------------------------------------
@@ -5076,32 +4753,16 @@ def extract_mp3_meta(df: DataFrame) -> DataFrame:
     """Distributed MP3 frame-chain metadata: per payload the version,
     sample rate, frame/sample/byte counts, mean bitrate and duration
     (each a single double division over exact integers). Out-of-profile
-    payloads yield NULL rows (voided whole). O(files) rows out."""
+    payloads yield NULL rows (voided whole)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                got = parse_mp3_frames(None if payload is None else bytes(payload))
-                if got is None:
-                    rows.append((int(mid),) + (None,) * 7)
-                    continue
-                v, sr, nf, samples, abytes, kbps_sum = got
-                rows.append(
-                    (
-                        int(mid), v, sr, nf, samples, abytes,
-                        kbps_sum / nf, samples / sr,
-                    )
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "mpeg_version", "sample_rate", "n_frames",
-                 "total_samples", "audio_bytes", "avg_kbps", "duration_sec"],
-                ["int64", "object", "Int32", "Int32", "Int64", "Int64",
-                 "Float64", "Float64"],
-            )
+    def per_item(b):
+        got = parse_mp3_frames(b)
+        if got is None:
+            return None
+        v, sr, nf, samples, abytes, kbps_sum = got
+        return [(v, sr, nf, samples, abytes, kbps_sum / nf, samples / sr)]
 
-    return df.mapInPandas(run, schema=MP3_META_SCHEMA)
+    return _map_payloads(df, MP3_META_SCHEMA, per_item)
 
 
 def encode_flac_header(
@@ -5201,28 +4862,13 @@ def extract_flac_meta(df: DataFrame) -> DataFrame:
     the container's own raw-audio md5 (the integrity anchor a corpus
     can verify after any future transcode), metadata block count, and
     duration (one double division). NULL rows for out-of-profile
-    payloads. O(files) rows out."""
+    payloads."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                got = parse_flac_streaminfo(
-                    None if payload is None else bytes(payload)
-                )
-                if got is None:
-                    rows.append((int(mid),) + (None,) * 7)
-                    continue
-                rate, ch, bits, samples, md5hex, blocks = got
-                rows.append(
-                    (int(mid), rate, ch, bits, samples, md5hex, blocks, samples / rate)
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "sample_rate", "channels", "bits_per_sample",
-                 "total_samples", "audio_md5", "n_blocks", "duration_sec"],
-                ["int64", "Int32", "Int32", "Int32", "Int64", "object",
-                 "Int32", "Float64"],
-            )
+    def per_item(b):
+        got = parse_flac_streaminfo(b)
+        if got is None:
+            return None
+        rate, ch, bits, samples, md5hex, blocks = got
+        return [(rate, ch, bits, samples, md5hex, blocks, samples / rate)]
 
-    return df.mapInPandas(run, schema=FLAC_META_SCHEMA)
+    return _map_payloads(df, FLAC_META_SCHEMA, per_item)

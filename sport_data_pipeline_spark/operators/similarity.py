@@ -365,12 +365,16 @@ def lsh_threshold_pairs(
     planes there are; written out per plane, 8 × 12 × 64 products in one
     projection exhausted a 6 GB heap while planning.
 
+    The result is lazy and reads ``df`` twice (signatures, then the
+    verify join), so the operator caches nothing it could never
+    unpersist: a caller that wants the input read once caches ``df``.
+
     Returns (id_a, id_b, cosine) with cosine >= threshold.
     """
     v = df.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
         _norm(F.col(vec_col), dim).alias("__n"),
-    ).filter(F.col("__n") > 0).persist(StorageLevel.MEMORY_AND_DISK)
+    ).filter(F.col("__n") > 0)
 
     # weight i of plane (t, p) = xxhash64(seed, t, p, i) / 2^63, in
     # [-1, 1]; xxhash64 hashes by type, and t, p, i are all ints

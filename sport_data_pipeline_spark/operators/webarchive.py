@@ -22,9 +22,7 @@ uncompressed concatenation is also in profile.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -33,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .multimodal import _map_payloads
 
 #: cap on total decompressed bytes per item (decode-bomb guard — a
 #: 10 KB gzip member can inflate to GBs; same posture as _MAX_DECODE_PIXELS)
@@ -174,43 +174,25 @@ def extract_warc_stats(df: DataFrame) -> DataFrame:
     rows out; bodies never leave the executor."""
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal import _typed_frame
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                recs = parse_warc_records(None if payload is None else bytes(payload))
-                if recs is None:
-                    rows.append((int(mid),) + (None,) * 6)
-                    continue
-                types = [h.get("warc-type", "") for h, _ in recs]
-                bodies = [b for _, b in recs]
-                conv = [
-                    b for (h, b) in recs if h.get("warc-type", "") == "conversion"
-                ]
-                csv = ",".join(
-                    f"{t}:{len(b)}" for t, b in zip(types, bodies)
-                ).encode()
-                rows.append(
-                    (
-                        int(mid),
-                        len(recs),
-                        len(conv),
-                        sum(len(b) for b in bodies),
-                        max(len(b) for b in bodies),
-                        hashlib.md5(csv).hexdigest(),
-                        hashlib.md5(b"".join(conv)).hexdigest(),
-                    )
-                )
-            yield _typed_frame(
-                rows,
-                ["media_id", "n_records", "n_conversion", "total_body_bytes",
-                 "max_body_bytes", "records_md5", "text_md5"],
-                ["int64", "Int32", "Int32", "Int64", "Int64", "object", "object"],
+    def per_item(b):
+        recs = parse_warc_records(b)
+        if recs is None:
+            return None
+        bodies = [body for _, body in recs]
+        conv = [body for h, body in recs if h.get("warc-type", "") == "conversion"]
+        csv = ",".join(f"{h.get('warc-type', '')}:{len(body)}" for h, body in recs).encode()
+        return [
+            (
+                len(recs),
+                len(conv),
+                sum(len(body) for body in bodies),
+                max(len(body) for body in bodies),
+                hashlib.md5(csv).hexdigest(),
+                hashlib.md5(b"".join(conv)).hexdigest(),
             )
+        ]
 
-    return df.mapInPandas(run, schema=WARC_STATS_SCHEMA)
+    return _map_payloads(df, WARC_STATS_SCHEMA, per_item)
 
 
 WARC_RECORDS_SCHEMA = StructType(
@@ -239,46 +221,20 @@ def warc_text_records(df: DataFrame) -> DataFrame:
     `sample_frames` discipline for source primitives, vs the stats
     operators' NULL-row voiding for per-item reports."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One output frame PER ARROW BATCH (like extract_warc_stats): a
-        # task's worth of decoded record text never accumulates in Python —
-        # peak memory is bounded by one input batch's records, not the task.
-        for pdf in batches:
-            out_id: list[int] = []
-            out_idx: list[int] = []
-            out_type: list[str | None] = []
-            out_uri: list[str | None] = []
-            out_len: list[int] = []
-            out_text: list[str | None] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                recs = parse_warc_records(None if payload is None else bytes(payload))
-                if recs is None:
-                    continue
-                for k, (h, body) in enumerate(recs):
+    def per_item(b):
+        recs = parse_warc_records(b)
+        rows = []
+        for k, (h, body) in enumerate(recs or []):
+            text = None
+            if h.get("warc-type") == "conversion":
+                try:
+                    text = body.decode("utf-8", "strict")
+                except UnicodeDecodeError:
                     text = None
-                    if h.get("warc-type") == "conversion":
-                        try:
-                            text = body.decode("utf-8", "strict")
-                        except UnicodeDecodeError:
-                            text = None
-                    out_id.append(int(mid))
-                    out_idx.append(k)
-                    out_type.append(h.get("warc-type"))
-                    out_uri.append(h.get("warc-target-uri"))
-                    out_len.append(len(body))
-                    out_text.append(text)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(out_id, dtype="int64"),
-                    "rec_idx": pd.array(out_idx, dtype="Int32"),
-                    "warc_type": pd.array(out_type, dtype="object"),
-                    "target_uri": pd.array(out_uri, dtype="object"),
-                    "content_length": pd.array(out_len, dtype="int64"),
-                    "body_text": pd.array(out_text, dtype="object"),
-                }
-            )
+            rows.append((k, h.get("warc-type"), h.get("warc-target-uri"), len(body), text))
+        return rows
 
-    return df.mapInPandas(run, schema=WARC_RECORDS_SCHEMA)
+    return _map_payloads(df, WARC_RECORDS_SCHEMA, per_item)
 
 
 def crawl_route_records(

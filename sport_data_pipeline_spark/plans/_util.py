@@ -26,15 +26,6 @@ def dsum(col: Column | str) -> Column:
     return F.sum(c.cast(DEC)).cast("double")
 
 
-def davg(col: Column | str) -> Column:
-    """Exact-sum average: decimal sum → double, divided by count.
-
-    Mirror: ``CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) / COUNT(x)``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(DEC)).cast("double") / F.count(c)
-
-
 def safe_div(num: Column, den: Column) -> Column:
     """CASE-guarded division (reference: engine.py:344 safe goals/matches)."""
     return F.when(den != 0, num / den).otherwise(F.lit(0.0))

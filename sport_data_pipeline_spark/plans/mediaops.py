@@ -64,6 +64,21 @@ from .registry import query
 _N_PER_KIND = 8
 
 
+def _media_frame(spark: SparkSession, rows) -> DataFrame:
+    """Fixture rows as a MEDIA_SCHEMA frame hash-spread over 4 partitions
+    by media_id, so every extractor runs across several Arrow batches."""
+    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+
+
+def _blocks(a, h: int, w: int):
+    """Per-8x8-block values expanded to an (h, w) uint8 plane, cropped:
+    the constant-block JPEG fixtures whose decode is bit-exact (see the
+    JPEG section of operators/multimodal.py)."""
+    import numpy as np
+
+    return np.kron(a, np.ones((8, 8), np.uint8))[:h, :w]
+
+
 def _png(w: int, h: int) -> bytes:
     return (
         b"\x89PNG\r\n\x1a\n"
@@ -211,9 +226,7 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fps=2 over the mvhd duration). All three extraction paths are
     Arrow-batched mapInPandas over the shared MEDIA_SCHEMA.
     """
-    media = spark.createDataFrame(_synthesize_media_rows(), MEDIA_SCHEMA).repartition(
-        4, "media_id"
-    )
+    media = _media_frame(spark, _synthesize_media_rows())
 
     dims = extract_media_dimensions(media).select("media_id", "format", "width", "height")
     audio = extract_audio_meta(media).select(
@@ -321,7 +334,7 @@ def image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).astype(np.uint8)
         payload = encode_png_rgb(px)  # filter type cycles 0..4 per row
         rows.append((i, payload, "image/png", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media).orderBy("media_id")
 
 
@@ -382,7 +395,7 @@ def audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = ((7919 * (i + 13 * k)) % 65536 - 32768).astype(np.int16)
         payload = encode_wav_pcm(v, rate, channels)
         rows.append((k, payload, "audio/wav", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_audio_stats(media).orderBy("media_id")
 
 
@@ -460,7 +473,7 @@ def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             axis=-1,
         ).astype(np.uint8)
         rows.append((i, encode_png_rgb(px), "image/png", 0, None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(resize_image_payloads(media, factor=2)).orderBy(
         "media_id"
     )
@@ -524,9 +537,9 @@ def jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         nbx, nby = (w + 7) // 8, (h + 7) // 8
         by, bx = np.mgrid[0:nby, 0:nbx]
         bv = (8 + 2 * ((7 * i + 3 * bx + 5 * by) % 120)).astype(np.uint8)
-        px = np.kron(bv, np.ones((8, 8), np.uint8))[:h, :w]
+        px = _blocks(bv, h, w)
         rows.append((100 + i, encode_jpeg_gray(px), "image/jpeg", 0, None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_jpeg_stats(media).orderBy("media_id")
 
 
@@ -591,13 +604,13 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in range(3 + i):
             by, bx = np.mgrid[0:nby, 0:nbx]
             bv = (8 + 2 * ((7 * i + 11 * f + 3 * bx + 5 * by) % 120)).astype(np.uint8)
-            frames.append(encode_jpeg_gray(np.kron(bv, np.ones((8, 8), np.uint8))[:h, :w]))
+            frames.append(encode_jpeg_gray(_blocks(bv, h, w)))
         # odd fixtures store chunk offsets as 64-bit co64 (the >4 GB muxer
         # layout) — identical frames, so the same hash covers both tables
         rows.append(
             (400 + i, build_mp4_mjpeg(frames, use_co64=bool(i % 2)), "video/mp4", 0, None)
         )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_video_frame_stats(media).orderBy("media_id")
 
 
@@ -649,7 +662,8 @@ FROM rgb GROUP BY i, w, h ORDER BY media_id
 @query("jpeg_color_pixel_stats", survey="llm-multimodal,X6", oracle=JPEG_COLOR_STATS_ORACLE)
 def jpeg_color_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL entropy-level COLOR JPEG decode, distributed: per-image RGB
-    channel stats via ``extract_jpeg_color_stats`` — baseline 4:4:4
+    channel stats via ``extract_pixel_stats`` over ``decode_jpeg_rgb`` —
+    baseline 4:4:4
     three-component interleaved huffman + DPCM decode (per-component
     predictors, Annex-K luma AND chroma table sets), dequantization,
     IDCT, and the CCIR 601 inverse color transform inside Arrow-batched
@@ -670,7 +684,7 @@ def jpeg_color_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..operators.multimodal import encode_jpeg_ycbcr, extract_jpeg_color_stats
+    from ..operators.multimodal import decode_jpeg_rgb, encode_jpeg_ycbcr, extract_pixel_stats
 
     rows = []
     for i in range(_N_PER_KIND):
@@ -681,12 +695,10 @@ def jpeg_color_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cbb = (128 + 17 * (((11 * i + bx + 2 * by) % 15) - 7)).astype(np.uint8)
         crb = (128 + 17 * (((13 * i + 2 * bx + by) % 15) - 7)).astype(np.uint8)
 
-        def up(a):
-            return np.kron(a, np.ones((8, 8), np.uint8))[:h, :w]
-
-        rows.append((500 + i, encode_jpeg_ycbcr(up(yb), up(cbb), up(crb)), "image/jpeg", 0, None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
-    return extract_jpeg_color_stats(media).orderBy("media_id")
+        planes = [_blocks(a, h, w) for a in (yb, cbb, crb)]
+        rows.append((500 + i, encode_jpeg_ycbcr(*planes), "image/jpeg", 0, None))
+    media = _media_frame(spark, rows)
+    return extract_pixel_stats(media, decoder=decode_jpeg_rgb).orderBy("media_id")
 
 
 # Audio-resample oracle: the audio twin of RESIZE_STATS_ORACLE — samples
@@ -774,8 +786,8 @@ def audio_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload = encode_wav_pcm(v, rate, channels)
         rows2.append((600 + k, payload, "audio/wav", len(payload), None))
         rows3.append((620 + k, payload, "audio/wav", len(payload), None))
-    media2 = spark.createDataFrame(rows2, MEDIA_SCHEMA).repartition(4, "media_id")
-    media3 = spark.createDataFrame(rows3, MEDIA_SCHEMA).repartition(4, "media_id")
+    media2 = _media_frame(spark, rows2)
+    media3 = _media_frame(spark, rows3)
     out2 = extract_audio_stats(resample_wav_payloads(media2, factor=2))
     out3 = extract_audio_stats(resample_wav_payloads(media3, factor=3))
     return out2.unionByName(out3).orderBy("media_id")
@@ -834,8 +846,9 @@ def jpeg_420_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, the 16-aligned pad/crop geometry, and the pinned 2x2
     replication chroma upsample that ``jpeg_color_pixel_stats`` (4:4:4,
     one block per component per MCU) cannot reach. Runs inside
-    Arrow-batched mapInPandas via ``extract_jpeg_color_stats`` — the
-    extractor is sampling-agnostic; the payload bytes select the path.
+    Arrow-batched mapInPandas via ``extract_pixel_stats`` over
+    ``decode_jpeg_rgb`` — the decoder is sampling-agnostic; the payload
+    bytes select the path.
 
     Fixtures: full-res Y planes per-8x8-block constant at even levels,
     SUBSAMPLED chroma planes per-8x8-block constant at 128+17t on the
@@ -850,7 +863,11 @@ def jpeg_420_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py test_jpeg_420_* / test_jpeg_dri_*."""
     import numpy as np
 
-    from ..operators.multimodal import encode_jpeg_ycbcr_420, extract_jpeg_color_stats
+    from ..operators.multimodal import (
+        decode_jpeg_rgb,
+        encode_jpeg_ycbcr_420,
+        extract_pixel_stats,
+    )
 
     rows = []
     for i in range(_N_PER_KIND):
@@ -864,20 +881,17 @@ def jpeg_420_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cbb = (128 + 17 * (((11 * i + cbx + 2 * cby) % 15) - 7)).astype(np.uint8)
         crb = (128 + 17 * (((13 * i + 2 * cbx + cby) % 15) - 7)).astype(np.uint8)
 
-        def up(a, hh, ww):
-            return np.kron(a, np.ones((8, 8), np.uint8))[:hh, :ww]
-
         # odd fixtures carry DRI/RSTn restart markers (r10: in profile —
         # predictor resets + modulo-8 sequence check); the pixel math and
         # therefore the oracle are IDENTICAL, so the hash-match certifies
         # the restart path against the marker-free twin formulas
         payload = encode_jpeg_ycbcr_420(
-            up(yb, h, w), up(cbb, ch, cw), up(crb, ch, cw),
+            _blocks(yb, h, w), _blocks(cbb, ch, cw), _blocks(crb, ch, cw),
             restart_interval=(2 if i % 2 else 0),
         )
         rows.append((700 + i, payload, "image/jpeg", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
-    return extract_jpeg_color_stats(media).orderBy("media_id")
+    media = _media_frame(spark, rows)
+    return extract_pixel_stats(media, decoder=decode_jpeg_rgb).orderBy("media_id")
 
 
 # 4:2:2 pixel-stats oracle: same structure as the 4:4:4/4:2:0 oracles —
@@ -930,7 +944,7 @@ def jpeg_422_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``jpeg_420_pixel_stats``) this completes the oracle coverage of all
     three supported color samplings — the 2x1 MCU raster and the
     column-only replication upsample are the paths the other two cannot
-    reach. Same extractor (``extract_jpeg_color_stats`` is
+    reach. Same extractor and decoder (``decode_jpeg_rgb`` is
     sampling-agnostic), same Arrow-batched mapInPandas shape.
 
     Fixtures mirror the 4:2:0 query's: per-8x8-block constant planes at
@@ -941,7 +955,11 @@ def jpeg_422_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py test_jpeg_422_*."""
     import numpy as np
 
-    from ..operators.multimodal import encode_jpeg_ycbcr_422, extract_jpeg_color_stats
+    from ..operators.multimodal import (
+        decode_jpeg_rgb,
+        encode_jpeg_ycbcr_422,
+        extract_pixel_stats,
+    )
 
     rows = []
     for i in range(_N_PER_KIND):
@@ -955,16 +973,13 @@ def jpeg_422_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cbb = (128 + 17 * (((11 * i + cbx + 2 * cby) % 15) - 7)).astype(np.uint8)
         crb = (128 + 17 * (((13 * i + 2 * cbx + cby) % 15) - 7)).astype(np.uint8)
 
-        def up(a, hh, ww):
-            return np.kron(a, np.ones((8, 8), np.uint8))[:hh, :ww]
-
         payload = encode_jpeg_ycbcr_422(
-            up(yb, h, w), up(cbb, h, cw), up(crb, h, cw),
+            _blocks(yb, h, w), _blocks(cbb, h, cw), _blocks(crb, h, cw),
             restart_interval=(2 if i % 2 else 0),
         )
         rows.append((800 + i, payload, "image/jpeg", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
-    return extract_jpeg_color_stats(media).orderBy("media_id")
+    media = _media_frame(spark, rows)
+    return extract_pixel_stats(media, decoder=decode_jpeg_rgb).orderBy("media_id")
 
 
 # Progressive-JPEG pixel-stats oracle: IDENTICAL pixel math to
@@ -1033,8 +1048,9 @@ def jpeg_progressive_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from ..operators.multimodal import (
+        decode_jpeg_rgb,
         encode_jpeg_progressive,
-        extract_jpeg_color_stats,
+        extract_pixel_stats,
     )
 
     rows = []
@@ -1046,13 +1062,10 @@ def jpeg_progressive_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cbb = (128 + 17 * (((11 * i + bx + 2 * by) % 15) - 7)).astype(np.uint8)
         crb = (128 + 17 * (((13 * i + 2 * bx + by) % 15) - 7)).astype(np.uint8)
 
-        def up(a):
-            return np.kron(a, np.ones((8, 8), np.uint8))[:h, :w]
-
-        payload = encode_jpeg_progressive(up(yb), up(cbb), up(crb))
+        payload = encode_jpeg_progressive(*[_blocks(a, h, w) for a in (yb, cbb, crb)])
         rows.append((900 + i, payload, "image/jpeg", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
-    return extract_jpeg_color_stats(media).orderBy("media_id")
+    media = _media_frame(spark, rows)
+    return extract_pixel_stats(media, decoder=decode_jpeg_rgb).orderBy("media_id")
 
 
 # Sampling-matrix oracle: 4:4:0 (vertical-only subsampling, fixtures
@@ -1114,8 +1127,9 @@ def jpeg_sampling_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from ..operators.multimodal import (
+        decode_jpeg_rgb,
         encode_jpeg_ycbcr_subsampled,
-        extract_jpeg_color_stats,
+        extract_pixel_stats,
     )
 
     rows = []
@@ -1131,16 +1145,13 @@ def jpeg_sampling_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cbb = (128 + 17 * (((11 * i + cbx + 2 * cby) % 15) - 7)).astype(np.uint8)
         crb = (128 + 17 * (((13 * i + 2 * cbx + cby) % 15) - 7)).astype(np.uint8)
 
-        def up(a, hh, ww):
-            return np.kron(a, np.ones((8, 8), np.uint8))[:hh, :ww]
-
         payload = encode_jpeg_ycbcr_subsampled(
-            up(yb, h, w), up(cbb, ch, cw), up(crb, ch, cw), (sh, sv),
+            _blocks(yb, h, w), _blocks(cbb, ch, cw), _blocks(crb, ch, cw), (sh, sv),
             restart_interval=(2 if i % 2 else 0),
         )
         rows.append((1000 + i, payload, "image/jpeg", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
-    return extract_jpeg_color_stats(media).orderBy("media_id")
+    media = _media_frame(spark, rows)
+    return extract_pixel_stats(media, decoder=decode_jpeg_rgb).orderBy("media_id")
 
 
 # GIF pixel-stats oracle: GIF is LOSSLESS (palette indices through LZW),
@@ -1209,7 +1220,7 @@ def gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = ((x + 2 * y + 7 * i) % 16).astype(np.uint8)
         payload = encode_gif_rgb(idx, pal, interlace=bool(i % 2))
         rows.append((1100 + i, payload, "image/gif", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media, decoder=decode_gif_rgb).orderBy("media_id")
 
 
@@ -1285,7 +1296,7 @@ def audio_g711_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         law = "ulaw" if k < 4 else "alaw"
         payload = encode_wav_g711(codes, 8000, channels, law)
         rows.append((1200 + k, payload, "audio/basic", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_audio_stats(media).orderBy("media_id")
 
 
@@ -1362,7 +1373,7 @@ def png_typed_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             g = ((4 * x + 9 * y + 6 * i) % 256).astype(np.uint8)
             payload = encode_png_gray(g)
         rows.append((1300 + i, payload, "image/png", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media).orderBy("media_id")
 
 
@@ -1479,7 +1490,7 @@ def audio_adpcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             body += b"\x00"
         payload = b"RIFF" + struct.pack("<I", len(body)) + body
         rows.append((1400 + k, payload, "audio/wav", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_audio_stats(media).orderBy("media_id")
 
 
@@ -1565,7 +1576,7 @@ def bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             idx = ((3 * x + y + 5 * i) % 16).astype(np.uint8)
             payload = encode_bmp_indexed(idx, pal, top_down=td)
         rows.append((1500 + i, payload, "image/bmp", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media, decoder=decode_bmp_rgb).orderBy("media_id")
 
 
@@ -1676,7 +1687,7 @@ def image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((1620 + i, encode_bmp_rgb(pert), "image/bmp", 0, None))
     rows.append((1640, b"BM\x00corrupt", "image/bmp", 0, None))
     rows = [(mid, p, m, len(p), j) for mid, p, m, _, j in rows]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     hashes = extract_image_dhash(media, decoder=decode_bmp_rgb)
     return (
         dhash_neardup_pairs(hashes, max_hamming=3)
@@ -1788,7 +1799,7 @@ def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((1720 + i, encode_wav_pcm(pert, 8000, channels), "audio/wav"))
     rows.append((1740, b"RIFFcorrupt", "audio/wav"))
     rows = [(mid, p, m, len(p), None) for mid, p, m in rows]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     fps = extract_audio_fingerprint(media)
     return (
         dhash_neardup_pairs(fps, max_hamming=3, hash_col="fp")
@@ -1873,13 +1884,13 @@ def video_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 np.uint8
             )
             frames.append(
-                encode_jpeg_gray(np.kron(bv, np.ones((8, 8), np.uint8))[:h, :w])
+                encode_jpeg_gray(_blocks(bv, h, w))
             )
         rows.append(
             (1800 + i, build_mp4_mjpeg(frames, use_co64=bool(i % 2)), "video/mp4", 0, None)
         )
     rows = [(mid, p, m, len(p), j) for mid, p, m, _, j in rows]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_video_scene_changes(media).orderBy("media_id")
 
 
@@ -2015,9 +2026,9 @@ def incremental_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [(1950 + i, encode_bmp_rgb(fresh(i)), "image/bmp") for i in (4, 5)]
         + [(1956, b"BM\x00corrupt", "image/bmp")]
     )
-    as_media = lambda rows: spark.createDataFrame(
-        [(mid, p, m, len(p), None) for mid, p, m in rows], MEDIA_SCHEMA
-    ).repartition(4, "media_id")
+    as_media = lambda rows: _media_frame(
+        spark, [(mid, p, m, len(p), None) for mid, p, m in rows]
+    )
     corpus = extract_image_dhash(as_media(corpus_rows), decoder=decode_bmp_rgb)
     batch = extract_image_dhash(as_media(batch_rows), decoder=decode_bmp_rgb)
     return (
@@ -2345,7 +2356,7 @@ def tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             img = ((6 * x + 5 * y + 9 * i) % 256).astype(np.uint8)
         payload = encode_tiff(img, order=order, rows_per_strip=5)
         rows.append((2300 + i, payload, "image/tiff", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media, decoder=decode_tiff_rgb).orderBy("media_id")
 
 
@@ -2431,13 +2442,13 @@ def video_keyframe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 np.uint8
             )
             frames.append(
-                encode_jpeg_gray(np.kron(bv, np.ones((8, 8), np.uint8))[:h, :w])
+                encode_jpeg_gray(_blocks(bv, h, w))
             )
         rows.append(
             (2400 + i, build_mp4_mjpeg(frames, use_co64=bool(i % 2)), "video/mp4", 0, None)
         )
     rows = [(mid, p, m, len(p), j) for mid, p, m, _, j in rows]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return (
         extract_keyframe_stats(media)
         .select(
@@ -2526,7 +2537,7 @@ def tiff_compressed_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         order = "II" if i < 4 else "MM"
         payload = encode_tiff(img, order=order, rows_per_strip=4, compression=comp)
         rows.append((2500 + i, payload, "image/tiff", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media, decoder=decode_tiff_rgb).orderBy("media_id")
 
 
@@ -2591,7 +2602,7 @@ def bmp_rle_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = (((x // 5) + 2 * y + 3 * i) % 16).astype(np.uint8)
         payload = encode_bmp_rle8(idx, pal)
         rows.append((2600 + i, payload, "image/bmp", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media, decoder=decode_bmp_rgb).orderBy("media_id")
 
 
@@ -2719,7 +2730,7 @@ def media_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         img = np.repeat(g[:, :, None], 3, axis=2).astype(np.uint8)
         rows.append((2740 + i, encode_bmp_rgb(img), "image/bmp"))
     rows = [(mid, p, m, len(p), None) for mid, p, m in rows]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     hashes = extract_image_dhash(media, decoder=decode_bmp_rgb)
     pairs = dhash_neardup_pairs(hashes, max_hamming=3)
     return (
@@ -2782,7 +2793,7 @@ def audio_float_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         f = (kk.astype(np.float64) * 2.0**-15).astype(np.float32)
         payload = encode_wav_float32(f, 22050, channels)
         rows.append((2800 + k, payload, "audio/wav", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_audio_stats(media).orderBy("media_id")
 
 
@@ -2916,7 +2927,7 @@ def gif_animation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         payload = encode_gif_animation((w, h), pal, frames, bg_index=0)
         rows.append((1800 + i, payload, "image/gif", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_gif_animation_stats(media).orderBy("media_id", "frame_idx")
 
 
@@ -2996,7 +3007,7 @@ def tiff_predictor_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             img, order=order, rows_per_strip=5, compression=5, predictor=2
         )
         rows.append((2900 + i, payload, "image/tiff", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media, decoder=decode_tiff_rgb).orderBy("media_id")
 
 
@@ -3080,7 +3091,7 @@ def audio_stereo_downmix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             inter = left.astype(np.int16)
         payload = encode_wav_pcm(inter, rate, channels)
         rows.append((3000 + k, payload, "audio/wav", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_audio_channel_stats(media).orderBy("media_id")
 
 
@@ -3182,7 +3193,7 @@ def png_adam7_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).astype(np.uint8)
             payload = encode_png_rgb(rgb, interlace=True)
         rows.append((3100 + i, payload, "image/png", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media).orderBy("media_id")
 
 
@@ -3251,7 +3262,7 @@ def warc_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         payload = encode_warc(recs, gzip_members=(i % 2 == 0))
         rows.append((4000 + i, payload, "application/warc", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_warc_stats(media).orderBy("media_id")
 
 
@@ -3316,7 +3327,7 @@ def warc_to_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             recs.append((hdr, (f"doc-{i}-{j} " * (5 + j)).encode()))
         payload = encode_warc(recs, gzip_members=(i % 2 == 0))
         rows.append((4100 + i, payload, "application/warc", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     recs_df = warc_text_records(media)
     return recs_df.select(
         "media_id",
@@ -3452,7 +3463,7 @@ def warc_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         payload = encode_warc(recs, gzip_members=(i % 2 == 0))
         rows.append((4200 + i, payload, "application/warc", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     docs = warc_text_records(media).filter(SF.col("warc_type") == "conversion")
     out = crawl_route_records(docs).select(
         "media_id", "rec_idx", "target_uri", "status", "kept", "n_tokens"
@@ -3599,7 +3610,7 @@ def crawl_url_hygiene_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         payload = encode_warc(recs, gzip_members=(i % 2 == 0))
         rows.append((4300 + i, payload, "application/warc", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     docs = warc_text_records(media).filter(SF.col("warc_type") == "conversion")
     return crawl_route_records(docs, canonical_urls=True).select(
         "media_id", "rec_idx", "target_uri", "status", "kept", "n_tokens",
@@ -3961,7 +3972,7 @@ def tiff_deflate_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             img, order=order, rows_per_strip=5, compression=8, predictor=pred
         )
         rows.append((4300 + i, payload, "image/tiff", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_pixel_stats(media, decoder=decode_tiff_rgb).orderBy("media_id")
 
 
@@ -4037,7 +4048,7 @@ def audio_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             id3v1=(i % 3 == 0),
         )
         rows.append((4400 + i, payload, "audio/mpeg", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_mp3_meta(media).orderBy("media_id")
 
 
@@ -4092,5 +4103,5 @@ def audio_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             extra_blocks=i % 3,
         )
         rows.append((4500 + i, payload, "audio/flac", len(payload), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(4, "media_id")
+    media = _media_frame(spark, rows)
     return extract_flac_meta(media).orderBy("media_id")

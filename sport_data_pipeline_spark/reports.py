@@ -10,7 +10,6 @@ collects the (small, already-aggregated) results, and formats driver-side.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
@@ -18,21 +17,6 @@ from pyspark.sql import DataFrame
 
 def _rows(df: DataFrame, limit: int = 100) -> list[dict]:
     return [r.asDict(recursive=True) for r in df.limit(limit).collect()]
-
-
-def html_table(df: DataFrame, title: str, limit: int = 100) -> str:
-    """Minimal HTML table renderer (reports.py:298-321 style)."""
-    rows = _rows(df, limit)
-    cols = df.columns
-    head = "".join(f"<th>{c}</th>" for c in cols)
-    body = "".join(
-        "<tr>" + "".join(f"<td>{r.get(c, '')}</td>" for c in cols) + "</tr>" for r in rows
-    )
-    return (
-        f"<html><head><title>{title}</title></head><body>"
-        f"<h1>{title}</h1><table><thead><tr>{head}</tr></thead>"
-        f"<tbody>{body}</tbody></table></body></html>"
-    )
 
 
 def render_report(sections: Mapping[str, DataFrame], title: str, limit: int = 100) -> str:
@@ -51,16 +35,3 @@ def render_report(sections: Mapping[str, DataFrame], title: str, limit: int = 10
         )
     parts.append("</body></html>")
     return "".join(parts)
-
-
-def api_envelope(df: DataFrame, limit: int = 100) -> dict:
-    """APIResponse envelope with measured execution time
-    (players.py:24-33: success/data/execution_time_ms)."""
-    t0 = time.perf_counter()
-    data = _rows(df, limit)
-    return {
-        "success": True,
-        "data": data,
-        "row_count": len(data),
-        "execution_time_ms": round((time.perf_counter() - t0) * 1000, 2),
-    }

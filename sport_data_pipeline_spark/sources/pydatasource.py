@@ -181,13 +181,13 @@ class SnapshotBatchReader(DataSourceReader):
         files = _snapshot_files(self.path, self.suffix, self.exclude_latest)
         if self.keep is not None:
             files = [p for p in files if _stem(p) in self.keep]
-        if not files:
-            # the API requires >=1 partition even when pruning removed all
-            # files; an empty sentinel keeps the scan a valid zero-row plan
-            return [_SnapshotPartition(path=None)]
-        return [
+        parts = [
             _SnapshotPartition(part, _stem(p)) for p in files for part in _part_files(p)
         ]
+        # the API requires >=1 partition even when pruning removed every
+        # file or every snapshot directory holds no part files; an empty
+        # sentinel keeps the scan a valid zero-row plan
+        return parts or [_SnapshotPartition(path=None)]
 
     def read(self, partition: _SnapshotPartition) -> Iterator:
         if partition is None or partition.path is None:

@@ -81,25 +81,6 @@ def start_upsert_sink(
     return writer.start()
 
 
-def windowed_tick_stats(
-    stream: DataFrame,
-    ts_col: str,
-    window_duration: str = "5 minutes",
-    watermark: str = "10 minutes",
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Tumbling-window aggregate with late-data watermark (the hardening the
-    reference's poll-overwrite model never had — SURVEY §2.9 closing note)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_duration), *group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n_ticks"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),
-        )
-    )
-
-
 def session_window_stats(
     stream: DataFrame,
     ts_col: str,

@@ -1,37 +1,9 @@
-"""Multimodal plumbing: binary payload schema + mapInPandas feature path."""
+"""Multimodal plumbing: container parsers, pixel/sample codecs and the
+Arrow-batched stats extractors over MEDIA_SCHEMA payloads."""
 
 from __future__ import annotations
 
 import pytest
-
-from sport_data_pipeline_spark.operators.multimodal import (
-    FEATURE_DIM,
-    attach_binary_payload,
-    extract_features,
-)
-
-from conftest import SF_DIR
-
-
-def test_binary_roundtrip_and_features(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
-    media = attach_binary_payload(docs, "doc_id", "text")
-    assert [f.name for f in media.schema.fields] == [
-        "media_id", "payload", "mime_type", "n_bytes", "meta_json",
-    ]
-    feats = extract_features(media, decode_stub=True).collect()
-    assert len(feats) == 20
-    for r in feats:
-        assert len(r["feature"]) == FEATURE_DIM
-        assert r["n_bytes"] > 0
-
-
-def test_features_deterministic(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(5)
-    media = attach_binary_payload(docs, "doc_id", "text")
-    a = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    b = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    assert a == b
 
 
 def _png(w: int, h: int) -> bytes:
@@ -109,19 +81,6 @@ def test_extract_media_dimensions_distributed(spark):
     assert (got[2]["format"], got[2]["width"], got[2]["height"]) == ("jpeg", 1920, 1080)
     assert (got[3]["format"], got[3]["width"], got[3]["height"]) == ("gif", 32, 16)
     assert got[4]["format"] is None and got[5]["format"] is None
-
-
-def test_real_decode_header_features(spark):
-    rows = [
-        (1, _png(100, 50), "image/png", 0, "{}"),
-        (2, b"not an image", "text/plain", 0, "{}"),
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, payload binary, mime_type string, n_bytes long, meta_json string"
-    )
-    feats = {r["media_id"]: r["feature"] for r in extract_features(media, decode_stub=False).collect()}
-    assert feats[1][:3] == [100.0, 50.0, 2.0]  # width, height, aspect
-    assert feats[2] is None  # unrecognized payload → NULL, not a crash
 
 
 # ---------------------------------------------------------------------------
@@ -222,16 +181,6 @@ def test_sample_frames_stride_and_cap(spark):
     assert abs((ts[1] - ts[0]) - 12.5) < 1e-4  # 100s / 8 frames
     assert 3 not in by_id
     assert all(r["frame"] is None for r in out)  # codec seam yields NULL
-
-
-def test_fit_within_geometry():
-    from sport_data_pipeline_spark.operators.multimodal import fit_within
-
-    assert fit_within(1920, 1080, 640, 640) == (640, 360)
-    assert fit_within(1080, 1920, 640, 640) == (360, 640)
-    assert fit_within(100, 50, 640, 640) == (100, 50)  # never upscale
-    assert fit_within(10000, 1, 64, 64) == (64, 1)
-    assert fit_within(0, 0, 64, 64) == (1, 1)
 
 
 def test_mediaops_synthesized_payloads_roundtrip_parsers():
@@ -863,8 +812,9 @@ def test_jpeg_color_decode_rejects_out_of_profile():
 def test_extract_jpeg_color_stats_distributed(spark):
     from sport_data_pipeline_spark.operators.multimodal import (
         MEDIA_SCHEMA,
+        decode_jpeg_rgb,
         encode_jpeg_ycbcr,
-        extract_jpeg_color_stats,
+        extract_pixel_stats,
     )
 
     rows = []
@@ -876,7 +826,7 @@ def test_extract_jpeg_color_stats_distributed(spark):
         want[i] = tuple(int(x) for x in exp)
     rows.append((9, b"\x00garbage", "image/jpeg", 0, None))
     df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(3, "media_id")
-    got = {r["media_id"]: r for r in extract_jpeg_color_stats(df).collect()}
+    got = {r["media_id"]: r for r in extract_pixel_stats(df, decoder=decode_jpeg_rgb).collect()}
     assert got[9]["sum_r"] is None
     for i, (sr, sg, sb) in want.items():
         assert (got[i]["sum_r"], got[i]["sum_g"], got[i]["sum_b"]) == (sr, sg, sb)
@@ -2136,8 +2086,9 @@ def test_stats_preserve_int64_past_float53_next_to_undecodable(spark):
     """A batch mixing an undecodable payload with a decodable one whose
     stat exceeds 2^53 must keep the int64 exact: plain pandas inference
     would coerce the mixed int/None column through float64 and silently
-    round (the bug _typed_frame exists to prevent). sum_sq here is
-    9e6 * 2^30 + 9, chosen so the float64 rounding WOULD be visible."""
+    round (the bug the schema-derived dtypes of _map_payloads prevent).
+    sum_sq here is 9e6 * 2^30 + 9, chosen so the float64 rounding WOULD
+    be visible."""
     import numpy as np
 
     from sport_data_pipeline_spark.operators.multimodal import (
@@ -2964,3 +2915,78 @@ def test_flac_streaminfo():
         else:
             buf = buf[: int(rng.integers(1, len(buf)))]
         parse_flac_streaminfo(bytes(buf))  # never raises
+
+
+def _contract_fixture(kind: str) -> bytes:
+    """One decodable payload per extractor for the operator-shape test:
+    every stat of its row is non-null (stereo audio, a video with a cut)."""
+    import hashlib
+
+    from sport_data_pipeline_spark.operators import multimodal as M
+
+    x, y = np.meshgrid(np.arange(24), np.arange(16))
+    rgb = np.stack([(3 * x + y) % 256, (5 * y) % 256, (x * y) % 256], -1).astype(np.uint8)
+    gray = lambda v: np.full((16, 24), v, np.uint8)  # noqa: E731
+    mjpeg = M.build_mp4_mjpeg([M.encode_jpeg_gray(gray(v)) for v in (40, 40, 200)])
+    stereo = M.encode_wav_pcm(np.arange(-200, 200, dtype=np.int16), 8000, 2)
+    return {
+        "png": M.encode_png_rgb(rgb),
+        "jpeg_rgb": M.encode_jpeg_ycbcr(gray(120), gray(128 + 17), gray(128 - 34)),
+        "jpeg_gray": M.encode_jpeg_gray(gray(96)),
+        "wav": stereo,
+        "mjpeg": mjpeg,
+        "gif_anim": M.encode_gif_animation(
+            (6, 4), [(0, 0, 0), (255, 0, 0)],
+            [{"indices": np.eye(4, 6, dtype=np.uint8)}, {"indices": np.ones((4, 6), np.uint8)}],
+        ),
+        "mp3": M.encode_mp3_stream([("1", 9, 0, 0), ("1", 9, 0, 1)]),
+        "flac": M.encode_flac_header(44100, 2, 16, 4410, hashlib.md5(b"x").digest()),
+    }[kind]
+
+
+_EXTRACTOR_CONTRACT = [
+    # (operator, its declared schema, decoder= or None, fixture kind)
+    ("extract_pixel_stats", "PIXEL_STATS_SCHEMA", None, "png"),
+    ("extract_pixel_stats", "PIXEL_STATS_SCHEMA", "decode_jpeg_rgb", "jpeg_rgb"),
+    ("extract_jpeg_stats", "JPEG_STATS_SCHEMA", None, "jpeg_gray"),
+    ("extract_audio_stats", "AUDIO_STATS_SCHEMA", None, "wav"),
+    ("extract_audio_channel_stats", "AUDIO_CHANNEL_STATS_SCHEMA", None, "wav"),
+    ("extract_audio_fingerprint", "AUDIO_FP_SCHEMA", None, "wav"),
+    ("extract_image_dhash", "DHASH_SCHEMA", None, "png"),
+    ("extract_video_frame_stats", "VIDEO_STATS_SCHEMA", None, "mjpeg"),
+    ("extract_video_scene_changes", "SCENE_SCHEMA", None, "mjpeg"),
+    ("extract_keyframe_stats", "KEYFRAME_SCHEMA", None, "mjpeg"),
+    ("extract_gif_animation_stats", "ANIMATION_STATS_SCHEMA", None, "gif_anim"),
+    ("extract_mp3_meta", "MP3_META_SCHEMA", None, "mp3"),
+    ("extract_flac_meta", "FLAC_META_SCHEMA", None, "flac"),
+]
+
+
+@pytest.mark.parametrize(
+    "op,schema,decoder,kind",
+    _EXTRACTOR_CONTRACT,
+    ids=[f"{op}-{decoder or 'default'}" for op, _, decoder, _ in _EXTRACTOR_CONTRACT],
+)
+def test_stats_extractor_operator_contract(spark, op, schema, decoder, kind):
+    """Every stats extractor has the same operator shape: one Arrow batch
+    holding a decodable payload, a NULL payload and garbage bytes yields
+    exactly the declared schema; the NULL and garbage items each give one
+    row of their media_id with every stat NULL, and the decodable item's
+    rows carry no NULL."""
+    from sport_data_pipeline_spark.operators import multimodal as M
+
+    rows = [
+        (1, _contract_fixture(kind), "x", 0, None),
+        (2, None, "x", 0, None),
+        (3, b"\x00garbage\xff" * 4, "x", 0, None),
+    ]
+    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA).repartition(1)
+    fn = getattr(M, op)
+    out = fn(media) if decoder is None else fn(media, decoder=getattr(M, decoder))
+    assert out.schema == getattr(M, schema)
+    got = out.collect()
+    for mid in (2, 3):
+        (void,) = [r for r in got if r["media_id"] == mid]
+        assert all(v is None for v in list(void)[1:]), void
+    good = [r for r in got if r["media_id"] == 1]
+    assert good and all(v is not None for r in good for v in r), good

@@ -126,6 +126,20 @@ def _schema_struct():
     )
 
 
+def test_batch_partitions_never_empty_when_snapshots_hold_no_parts(tmp_path):
+    # a snapshot directory whose write produced no part file (only the
+    # _SUCCESS marker) still lists, but expands to zero parts; the reader
+    # must fall back to its one empty sentinel, never return []
+    from sport_data_pipeline_spark.sources.pydatasource import SnapshotBatchReader
+
+    d = tmp_path / "snaps"
+    (d / "live_20240101_000000.json").mkdir(parents=True)
+    (d / "live_20240101_000000.json" / "_SUCCESS").write_text("")
+    parts = SnapshotBatchReader({"path": str(d)}, _schema_struct()).partitions()
+    assert len(parts) == 1 and parts[0].path is None
+    assert list(SnapshotBatchReader({"path": str(d)}, _schema_struct()).read(parts[0])) == []
+
+
 def test_stream_offset_stays_bounded(tmp_path):
     # the offset persisted per micro-batch must be O(1) in the number of
     # snapshots ever seen (a poll loop runs forever), not a full file list

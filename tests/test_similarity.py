@@ -145,6 +145,24 @@ def test_lsh_threshold_pairs_recall_on_planted_neardups(spark):
     assert lsh == exact  # recall 1.0 on this corpus, no false positives
 
 
+def test_lsh_threshold_pairs_leaves_nothing_cached(spark):
+    """The operator returns a lazy frame, so it can never unpersist a
+    frame it cached itself; collecting the result must leave the
+    session's persistent RDD count where it was."""
+    import random
+
+    from sport_data_pipeline_spark.operators.similarity import lsh_threshold_pairs
+
+    rng = random.Random(3)
+    df = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(200)],
+        "vec_id long, embedding array<double>",
+    )
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    lsh_threshold_pairs(df, "vec_id", threshold=0.9, dim=8, n_tables=2).collect()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+
+
 def test_pq_encode_codes_in_range_and_deterministic(emb):
     from sport_data_pipeline_spark.operators.similarity import pq_encode, train_pq
 

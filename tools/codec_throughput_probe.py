@@ -188,22 +188,24 @@ DECODERS = {
     "wav_pcm": "decode_wav_pcm",
 }
 
+#: codec -> (stats operator, the ``decoder=`` it runs with; None keeps
+#: the operator's default decoder)
 OPERATORS = {
-    "png": "extract_pixel_stats",
-    "jpeg_gray": "extract_jpeg_stats",
-    "jpeg_444": "extract_jpeg_color_stats",
-    "jpeg_420": "extract_jpeg_color_stats",
-    "jpeg_prog": "extract_jpeg_color_stats",
-    "gif": "gif_stats",  # extract_pixel_stats with the decoder= seam
-    "g711_ulaw": "extract_audio_stats",
-    "adpcm": "extract_audio_stats",
-    "bmp": "bmp_stats",  # extract_pixel_stats with the decoder= seam
-    "tiff": "tiff_stats",
-    "tiff_lzw": "tiff_stats",
-    "tiff_pred2": "tiff_stats",
-    "png_adam7": "extract_pixel_stats",
-    "gif_anim": "anim_stats",  # per composited FRAME rows out
-    "wav_pcm": "extract_audio_stats",
+    "png": ("extract_pixel_stats", None),
+    "jpeg_gray": ("extract_jpeg_stats", None),
+    "jpeg_444": ("extract_pixel_stats", "decode_jpeg_rgb"),
+    "jpeg_420": ("extract_pixel_stats", "decode_jpeg_rgb"),
+    "jpeg_prog": ("extract_pixel_stats", "decode_jpeg_rgb"),
+    "gif": ("extract_pixel_stats", "decode_gif_rgb"),
+    "g711_ulaw": ("extract_audio_stats", None),
+    "adpcm": ("extract_audio_stats", None),
+    "bmp": ("extract_pixel_stats", "decode_bmp_rgb"),
+    "tiff": ("extract_pixel_stats", "decode_tiff_rgb"),
+    "tiff_lzw": ("extract_pixel_stats", "decode_tiff_rgb"),
+    "tiff_pred2": ("extract_pixel_stats", "decode_tiff_rgb"),
+    "png_adam7": ("extract_pixel_stats", None),
+    "gif_anim": ("extract_gif_animation_stats", None),  # per composited FRAME rows out
+    "wav_pcm": ("extract_audio_stats", None),
 }
 
 
@@ -237,20 +239,12 @@ def op_run(spark, codec: str, payloads: list[bytes], target_items: int):
     ]
     df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(CPUS).cache()
     df.count()  # materialize inputs so the timing is the operator
-    if OPERATORS[codec] == "gif_stats":
-        def op(d):
-            return M.extract_pixel_stats(d, decoder=M.decode_gif_rgb)
-    elif OPERATORS[codec] == "bmp_stats":
-        def op(d):
-            return M.extract_pixel_stats(d, decoder=M.decode_bmp_rgb)
-    elif OPERATORS[codec] == "tiff_stats":
-        def op(d):
-            return M.extract_pixel_stats(d, decoder=M.decode_tiff_rgb)
-    elif OPERATORS[codec] == "anim_stats":
-        def op(d):
-            return M.extract_gif_animation_stats(d)
-    else:
-        op = getattr(M, OPERATORS[codec])
+    name, decoder = OPERATORS[codec]
+    fn = getattr(M, name)
+
+    def op(d):
+        return fn(d) if decoder is None else fn(d, decoder=getattr(M, decoder))
+
     t0 = time.perf_counter()
     n = op(df).count()
     dt = time.perf_counter() - t0
